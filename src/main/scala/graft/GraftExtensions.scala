@@ -27,9 +27,6 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(clazz: String, name: String) =
-    new ExpressionInfo(clazz, name)
-
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectCheckRule { session => (plan: LogicalPlan) =>
       if (session.conf.get("spark.graft.strictWindows", "false") == "true") {
@@ -54,21 +51,25 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         check(plan)
       }
     }
-    ext.injectFunction((FunctionIdentifier("poly_hash"),
-      info("graft.functions.PolyHash", "poly_hash"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.PolyHash(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("simhash64"),
-      info("graft.functions.SimHash64", "simhash64"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.SimHash64(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("minhash_sig"),
-      info("graft.functions.MinHashSig", "minhash_sig"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.MinHashSig(exprs.head).toAggregateExpression()))
-    ext.injectFunction((FunctionIdentifier("winnow_fps"),
-      info("graft.functions.WinnowFps", "winnow_fps"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.WinnowFps(exprs.head)))
+    GraftExtensions.functions.foreach { case (name, clazz, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(clazz, name), builder))
+    }
   }
+}
+
+object GraftExtensions {
+
+  /** The SQL-registered functions as (name, expression class, builder) —
+    * the one list both the extension and `bridge.registerFunctions`
+    * register. */
+  val functions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    ("poly_hash", classOf[graft.functions.PolyHash].getName,
+      exprs => graft.functions.PolyHash(exprs(0), exprs(1))),
+    ("simhash64", classOf[graft.functions.SimHash64].getName,
+      exprs => graft.functions.SimHash64(exprs.head)),
+    ("minhash_sig", classOf[graft.functions.MinHashSig].getName,
+      exprs => graft.functions.MinHashSig(exprs.head).toAggregateExpression()),
+    ("winnow_fps", classOf[graft.functions.WinnowFps].getName,
+      exprs => graft.functions.WinnowFps(exprs.head)))
 }

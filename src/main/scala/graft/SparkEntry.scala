@@ -5603,7 +5603,7 @@ object SparkEntry {
     // per-round scheduler overhead, the q124 argument; ScaleSmoke owns
     // its scale row).
     // BPE train + token accounting (vocabulary-scale merge loop; the
-    // TrainedCache makes iterations 2+ measure the encode pass):
+    // trained slot makes iterations 2+ measure the encode pass):
     "q210_bpe_token_stats",
     // span-tier verbatim-unit check (q192 funnel + digest aggregate):
     "q212_span_units",

@@ -124,7 +124,7 @@ case class CentDists(child: Expression, cents: Array[Array[Long]])
     case that: CentDists => child == that.child && DeepEq.eq(cents, that.cents)
     case _ => false
   }
-  override def hashCode(): Int =
+  override lazy val hashCode: Int =
     31 * (child.hashCode()) + DeepEq.hash(cents)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -187,7 +187,7 @@ case class CentArgmin(child: Expression, cents: Array[Array[Long]])
     case that: CentArgmin => child == that.child && DeepEq.eq(cents, that.cents)
     case _ => false
   }
-  override def hashCode(): Int =
+  override lazy val hashCode: Int =
     31 * (child.hashCode()) + DeepEq.hash(cents)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -251,7 +251,7 @@ case class CentResidual(left: Expression, right: Expression,
     case that: CentResidual => left == that.left && right == that.right && DeepEq.eq(cents, that.cents)
     case _ => false
   }
-  override def hashCode(): Int =
+  override lazy val hashCode: Int =
     31 * (left.hashCode() + 31 * right.hashCode()) + DeepEq.hash(cents)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -315,7 +315,7 @@ case class PqCodes(child: Expression, cb: Array[Array[Array[Long]]])
     case that: PqCodes => child == that.child && DeepEq.eq(cb, that.cb)
     case _ => false
   }
-  override def hashCode(): Int =
+  override lazy val hashCode: Int =
     31 * (child.hashCode()) + DeepEq.hash(cb)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -393,7 +393,7 @@ case class PqLut(child: Expression, cb: Array[Array[Array[Long]]])
     case that: PqLut => child == that.child && DeepEq.eq(cb, that.cb)
     case _ => false
   }
-  override def hashCode(): Int =
+  override lazy val hashCode: Int =
     31 * (child.hashCode()) + DeepEq.hash(cb)
 
   override def dataType: DataType =
@@ -469,7 +469,7 @@ case class SubCentDists(left: Expression, right: Expression,
     case that: SubCentDists => left == that.left && right == that.right && DeepEq.eq(cb, that.cb)
     case _ => false
   }
-  override def hashCode(): Int =
+  override lazy val hashCode: Int =
     31 * (left.hashCode() + 31 * right.hashCode()) + DeepEq.hash(cb)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)

@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the semantics ARE expressible with built-in higher-order functions
   * (`transform`/`aggregate`/`slice` — kept as the cross-checked reference
   * formulation in `Dedup.winnowFingerprintSetsHofFrom`), but HOF lambdas
-  * run interpreted: measured at sf0.1 (WinnowBench, median of 3), this
+  * run interpreted: measured at sf0.1 (median of 3 passes), this
   * fused O(L·K) loop is 13× faster than the carefully STAGED HOF form
   * (0.29 s vs 3.79 s) and ~1000× faster than the naive inlined HOF form
   * (330 s — each lambda re-evaluating its array subtree per element).

@@ -134,22 +134,17 @@ object Behavioral {
   def robustOutliers(spark: SparkSession, dir: String): DataFrame =
     robustOutliersFrom(Tables(spark, dir).events)
 
-  /** Bounded cache slots for the two bucketized scans (each feeds the
-    * offsets collect AND the rank re-join). */
-  private val medCache = new RotatingCache
-  private val madCache = new RotatingCache
-
   /** Same, over an arbitrary (event_id, event_type, value) relation. */
   private[graft] def robustOutliersFrom(ev: DataFrame): DataFrame = {
     val c = ev.select(col("event_type"), col("event_id"),
       round(col("value") * 100).cast("long").as("cents"))
-    val med = groupedLowerMedian(c, medCache)
+    val med = groupedLowerMedian(c, "Behavioral.med")
       .select(col("event_type"), col("v").as("med_cents"))
     val d = c.join(broadcast(med), Seq("event_type"))
       .withColumn("dev", abs(col("cents") - col("med_cents")))
     val mad = groupedLowerMedian(
         d.select(col("event_type"), col("event_id"),
-          col("dev").as("cents")), madCache)
+          col("dev").as("cents")), "Behavioral.mad")
       .select(col("event_type"), col("v").as("mad_cents"))
     d.join(broadcast(mad), Seq("event_type"))
       .groupBy(col("event_type"))
@@ -165,14 +160,12 @@ object Behavioral {
   /** The rank-(n+1)÷2 (lower-median) element of the (cents, event_id)
     * order per event_type, via the grouped GlobalOrder two-pass. */
   private def groupedLowerMedian(c: DataFrame,
-      cache: RotatingCache): DataFrame = {
+      slot: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import c.sparkSession.implicits._
-    val bucketed = GlobalOrder
+    val bucketed = GraftCache.persisted(slot, GlobalOrder
       .bucketizeForUniqueOrder(c, col("cents"), desc = false,
-        col("event_id"))
-      .persist()
-    cache.rotate(bucketed)
+        col("event_id")))
     val (bases, totals) = GlobalOrder.exclusiveOffsetsBy(bucketed,
       "event_type", count(lit(1)).as("c"))
     val offsetsDf = bases.toDF("event_type", "bucket", "rn_base")

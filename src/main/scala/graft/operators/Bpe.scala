@@ -50,7 +50,7 @@ import org.apache.spark.sql.functions._
   * one per-doc aggregate finish the job: nothing after the first
   * aggregate touches corpus-scale data, so 100 TB costs two corpus
   * passes total. Training is cached per corpus snapshot
-  * ([[TrainedCache]], the train-once-freeze posture).
+  * ([[GraftCache.trained]], the train-once-freeze posture).
   *
   * R envelope: [[BpeMerges]] = 8 is demo-scale; a production tokenizer
   * is R ≈ 30k. The training loop itself is R sequential vocabulary-
@@ -73,13 +73,6 @@ object Bpe {
 
   private val S1 = "\u0001"
   private val S2 = "\u0002"
-
-  private val mergeCache = new TrainedCache[Seq[(String, String, Long)]]
-
-  /** The word-count relation backs both training and the encode join;
-    * persisted for that whole lifetime (one slot — a changed corpus
-    * evicts, repeated bench passes reuse). */
-  private val wcCache = new RotatingCache
 
   /** Distinct ASCII words with corpus occurrence counts — the training
     * relation. */
@@ -213,8 +206,8 @@ object Bpe {
   private[graft] def bpeMergesFrom(spark: SparkSession,
       docs: DataFrame): DataFrame = {
     import spark.implicits._
-    val wc = wcCache.rotate(wordCounts(docs).persist())
-    val merges = mergeCache.getOrTrain(wc, Seq(BpeMerges))(
+    val wc = GraftCache.persisted("Bpe.wc", wordCounts(docs))
+    val merges = GraftCache.trained("Bpe.merge", wc, Seq(BpeMerges))(
       trainMergesDelta(wc, BpeMerges))
     merges.zipWithIndex
       .map { case ((pa, pb, n), i) => (i + 1L, pa, pb, n) }
@@ -233,8 +226,8 @@ object Bpe {
 
   private[graft] def bpeTokenStatsFrom(spark: SparkSession,
       docs: DataFrame): DataFrame = {
-    val wc = wcCache.rotate(wordCounts(docs).persist())
-    val merges = mergeCache.getOrTrain(wc, Seq(BpeMerges))(
+    val wc = GraftCache.persisted("Bpe.wc", wordCounts(docs))
+    val merges = GraftCache.trained("Bpe.merge", wc, Seq(BpeMerges))(
       trainMergesDelta(wc, BpeMerges))
     docs.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
       .filter(col("w") =!= "")

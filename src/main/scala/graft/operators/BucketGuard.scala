@@ -27,13 +27,6 @@ import org.apache.spark.sql.functions._
   */
 private[operators] object BucketGuard {
 
-  /** Bounded cache slot for the hot-bucket list (see [[RotatingCache]]):
-    * the list feeds BOTH sides of the caller's self-join plus the
-    * skipped-mass aggregate — persisting it runs the sizing aggregation
-    * once instead of three times. It is bounded by rows/cap buckets and
-    * empty on a healthy corpus. */
-  private val hotCache = new RotatingCache
-
   /** Splits `rows` into (kept rows, over-cap rows, 1-row skipped-mass
     * summary `(n_skipped_buckets, n_skipped_rows)`) by the size of the
     * bucket identified by `keys`. Oversized buckets are found with a
@@ -55,8 +48,7 @@ private[operators] object BucketGuard {
     val kcols = keys.map(col)
     val hot = rows.groupBy(kcols: _*).agg(count(lit(1)).as("_bsz"))
       .filter(col("_bsz") > cap)
-      .persist()
-    hotCache.rotate(hot)
+    GraftCache.persisted("BucketGuard.hot", hot)
     val kept = rows.join(hot.select(kcols: _*), keys, "left_anti")
     val hotRows = if (hot.isEmpty) None
       else Some(rows.join(hot.select(kcols: _*), keys, "left_semi"))

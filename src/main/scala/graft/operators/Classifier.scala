@@ -64,8 +64,6 @@ object Classifier {
     * unroll (SparkEntry generates it from this constant). */
   private[graft] val PerceptronRounds = 5
 
-  private val featCache = new RotatingCache
-
   /** Hashed unigram counts + bias row per document: (doc_id, b, n). */
   private def features(docs: DataFrame, buckets: Int): DataFrame = {
     import graft.functions.PolyHash.poly_hash
@@ -137,7 +135,7 @@ object Classifier {
   private[graft] def qualityPerceptronFrom(docs: DataFrame,
       buckets: Int = PerceptronBuckets,
       rounds: Int = PerceptronRounds): DataFrame = {
-    val xy = featCache.rotate(labeled(docs, buckets).persist())
+    val xy = GraftCache.persisted("Classifier.feat", labeled(docs, buckets))
     var w = Array.fill(buckets + 1)(0L)
     for (_ <- 1 to rounds) {
       val delta = roundDelta(xy, w)

@@ -14,10 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object CorpusOps {
 
-  /** Bounded cache slot for the scored scan (see [[RotatingCache]]) — it
-    * feeds three passes (budget total, bucket totals, final cumsum). */
-  private val scoreCache = new RotatingCache
-
   /** Knuth multiplicative constant (2654435761 = ⌊2³²/φ⌋, Knuth TAOCP
     * vol. 3 §6.4) shared by the deterministic-sampling family
     * (q112/q141/q191) and their oracle replays. */
@@ -64,8 +60,7 @@ object CorpusOps {
         col("doc_id"),
         TextFunctions.qualityScore(col("text")).as("quality_pm"),
         TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"))
-      .persist()
-    scoreCache.rotate(scored)
+    GraftCache.persisted("CorpusOps.score", scored)
     // descending quality ⇒ bucket 0 holds the best documents; the order
     // (quality DESC, doc_id) is unique, so ties may split across buckets
     // — a clamp-saturated corpus cannot concentrate one window task
@@ -145,9 +140,6 @@ object CorpusOps {
     packByTokens(spark, toks)
   }
 
-  /** Bounded cache slot for the decile-bucketed scan. */
-  private val decileCache = new RotatingCache
-
   /** Global quality deciles — binning every document of the corpus into
     * ntile(10) buckets of its quality score: THE canonical global-order
     * operation an LLM pipeline runs over 100 TB of quality scores (keep
@@ -164,8 +156,7 @@ object CorpusOps {
     val bucketed = GlobalOrder
       .bucketizeForUniqueOrder(scored, col("quality_pm"), desc = true,
         col("doc_id"))
-      .persist()
-    decileCache.rotate(bucketed)
+    GraftCache.persisted("CorpusOps.decile", bucketed)
     val (bases, totals) = GlobalOrder.exclusiveOffsets(bucketed,
       Seq(count(lit(1)).as("cnt")))
     val total = totals.head
@@ -416,9 +407,6 @@ object CorpusOps {
       .orderBy(col("doc_id"))
   }
 
-  /** Bounded cache slot for the mixture-scored scan. */
-  private val mixtureCache = new RotatingCache
-
   /** Domain-mixture selection (q145) — the mixture-rebalancing step of
     * corpus construction: each source (domain) gets a token QUOTA
     * proportional to its mixture weight, and spends it on its own best
@@ -445,8 +433,7 @@ object CorpusOps {
         col("doc_id"), col("source"),
         TextFunctions.qualityScore(col("text")).as("quality_pm"),
         TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"))
-      .persist()
-    mixtureCache.rotate(scored)
+    GraftCache.persisted("CorpusOps.mixture", scored)
     // weight table: #sources rows (metadata scale — domains are curated).
     // Alphabetical rank is by UTF-8 BYTE order (≡ code-point order — a
     // UTF-8 property), matching SQL binary collation (DuckDB ORDER BY);
@@ -489,9 +476,6 @@ object CorpusOps {
       .orderBy(col("doc_id"))
   }
 
-  /** Bounded cache slot for the grouped-decile scan. */
-  private val grpDecCache = new RotatingCache
-
   /** Per-language quality deciles (q157) — q114's global ntile(10)
     * computed WITHIN each language: the mixture-aware form of quality
     * binning (drop each language's own bottom deciles, so low-resource
@@ -517,8 +501,7 @@ object CorpusOps {
     val bucketed = GlobalOrder
       .bucketizeForUniqueOrder(scored, col("quality_pm"), desc = true,
         col("doc_id"))
-      .persist()
-    grpDecCache.rotate(bucketed)
+    GraftCache.persisted("CorpusOps.grpDec", bucketed)
     val (bases, totals) = GlobalOrder.exclusiveOffsetsBy(bucketed, "lang",
       count(lit(1)).as("c"))
     import docs.sparkSession.implicits._
@@ -548,15 +531,11 @@ object CorpusOps {
     * Scale shape: the fragments are each linear scans + key-bounded
     * shuffles (documented at their own entries); the composition joins
     * on doc_id and ends in a ≤ 10 × 3-cell aggregate — metadata out. */
-  /** Bounded cache slot for the report's hashed scan — it feeds both the
-    * canonical aggregate and the dup join. */
-  private val reportCache = new RotatingCache
-
   def corpusReport(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents
     val deciles = qualityDeciles(spark, dir).select(col("doc_id"), col("decile"))
-    val hashed = reportCache.rotate(
-      docs.select(col("doc_id"), md5(col("text")).as("h")).persist())
+    val hashed = GraftCache.persisted("CorpusOps.report",
+      docs.select(col("doc_id"), md5(col("text")).as("h")))
     val canon = hashed.groupBy(col("h")).agg(min(col("doc_id")).as("canonical_id"))
     val dup = hashed.join(canon, Seq("h"))
       .select(col("doc_id"), (col("doc_id") =!= col("canonical_id")).as("is_dup"))
@@ -808,11 +787,6 @@ object CorpusOps {
     * change (the histograms stay broadcastable at any plausible B). */
   private[graft] val DsirBuckets = 256
 
-  /** Bounded cache slot for the bucketed token scan (see
-    * [[RotatingCache]]) — it feeds the target histogram, the raw
-    * histogram, both totals, and the per-doc counts. */
-  private val dsirCache = new RotatingCache
-
   /** DSIR-style importance selection (q196) — Data Selection via
     * Importance Resampling (Xie et al., NeurIPS 2023): score every raw
     * document by how much more likely its tokens are under a TARGET
@@ -846,11 +820,10 @@ object CorpusOps {
   private[graft] def dsirImportanceFrom(docs: DataFrame,
       buckets: Int = DsirBuckets, k: Int = 64): DataFrame = {
     import graft.functions.PolyHash.poly_hash
-    val toks = dsirCache.rotate(docs
+    val toks = GraftCache.persisted("CorpusOps.dsir", docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       .select(col("doc_id"),
-        pmod(poly_hash(col("term"), lit(0L)), lit(buckets.toLong)).as("b"))
-      .persist())
+        pmod(poly_hash(col("term"), lit(0L)), lit(buckets.toLong)).as("b")))
     val tgt = toks.filter(col("doc_id") % 5 === 0)
     val raw = toks.filter(col("doc_id") % 5 =!= 0)
     val ct = tgt.groupBy(col("b")).agg(count(lit(1)).as("ct"))
@@ -876,8 +849,6 @@ object CorpusOps {
       .limit(k)
       .select(col("doc_id"), col("n_tokens"), col("dsir_q"))
   }
-
-  private val lenBatchCache = new RotatingCache
 
   /** Length-class width and sequences-per-batch for dynamic batching
     * (q239) — mirrored literally in the oracle. Production knobs:
@@ -915,10 +886,9 @@ object CorpusOps {
         size(split(col("text"), " ")).cast("long").as("len"))
       .withColumn("lb", expr(s"(len - 1) div $LenBucketWidth"))
       .withColumn("g", col("lb").cast("string"))
-    val bucketed = lenBatchCache.rotate(GlobalOrder
+    val bucketed = GraftCache.persisted("CorpusOps.lenBatch", GlobalOrder
       .bucketizeForUniqueOrder(scored, col("len"), desc = false,
-        col("doc_id"))
-      .persist())
+        col("doc_id")))
     val (bases, _) = GlobalOrder.exclusiveOffsetsBy(bucketed, "g",
       count(lit(1)).as("c"))
     import docs.sparkSession.implicits._

@@ -29,9 +29,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Bounded cache slot for the signature scan (see [[RotatingCache]]). */
-  private val sigCache = new RotatingCache
-
   private val K = 8            // shingle length
   private[graft] val NumHashes = 64   // minhash signature width
   private[graft] val NumBands = 16    // LSH bands (4 rows each)
@@ -137,7 +134,7 @@ object Dedup {
     * buckets stays conservative-kept. */
   private def minhashCandidates(docs: DataFrame, maxBucket: Int)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val sigs = sigCache.rotate(minhashSignatures(docs).persist())
+    val sigs = GraftCache.persisted("Dedup.sig", minhashSignatures(docs))
     val sigArr = sigs.select(col("doc_id"), col("sig"))
     // candidates: same band value in any band, deduplicated across bands
     val bandRows = sigs.select(col("doc_id"),
@@ -450,9 +447,6 @@ object Dedup {
         aggregate(col("fps"), lit(0L), (a, x) => a + x).as("fp_sum"))
       .orderBy(col("doc_id"))
 
-  /** Bounded cache slot for the segment explosion (see [[RotatingCache]]). */
-  private val segCache = new RotatingCache
-
   /** Repeated-segment removal (q137) — segment-granular exact dedup, the
     * CCNet/RefinedWeb-style cleaning step that whole-document dedup
     * cannot express: boilerplate (headers, navigation, license blocks)
@@ -506,11 +500,10 @@ object Dedup {
     // word sequence exactly, so keeping all segments ≡ the original
     // text). §2.3 / guide §8: shuffle the lightweight proxy, move the
     // heavy bytes once.
-    val segs = segCache.rotate(words
+    val segs = GraftCache.persisted("Dedup.seg", words
       .select(col("doc_id"), posexplode(segArr).as(Seq("seg_idx", "seg")))
       .select(col("doc_id"), col("seg_idx").cast("long").as("seg_idx"),
-        md5(col("seg")).as("h"))
-      .persist())
+        md5(col("seg")).as("h")))
     val hot = segs.groupBy(col("h"))
       .agg(countDistinct(col("doc_id")).as("nd"))
       .filter(col("nd") >= minDocs)
@@ -567,11 +560,6 @@ object Dedup {
   def repeatedSpans(spark: SparkSession, dir: String): DataFrame =
     repeatedSpansFrom(Tables(spark, dir).documents)
 
-  /** Bounded cache slot for the span-shingle relation — it feeds both
-    * q192 (detection) and q193 (cleaning), and each references it from
-    * two plan arms (frequency tier + mark join). */
-  private val spanCache = new RotatingCache
-
   /** The (doc_id, pos, h) sliding-window digest relation shared by
     * [[repeatedSpans]], [[spanDedupClean]] and the span-level
     * decontamination (TextAnalysis.spanDecontaminate): every n-token
@@ -592,7 +580,7 @@ object Dedup {
           .as(Seq("off", "h")))
       .select(col("doc_id"), (col("off") + 1).cast("long").as("pos"),
         col("h"))
-    if (cache) spanCache.rotate(sh.persist()) else sh
+    if (cache) GraftCache.persisted("Dedup.span", sh) else sh
   }
 
   /** Same, over an arbitrary (doc_id, text) corpus — lets tests plant a
@@ -801,11 +789,6 @@ object Dedup {
 
   // ------------------------------------------- exact τ-Jaccard self-join
 
-  /** Bounded cache slots for the q140 token relation and per-doc sorted
-    * arrays (see [[RotatingCache]]). */
-  private val tokCache = new RotatingCache
-  private val jacDocCache = new RotatingCache
-
   /** Exact token-set Jaccard self-join (q140) — every document pair with
     * Jaccard(tokens(A), tokens(B)) ≥ τ, computed EXACTLY via prefix
     * filtering (the AllPairs/PPJoin family, Bayardo et al. WWW'07):
@@ -859,9 +842,9 @@ object Dedup {
   def jaccardJoinFrom(docs: DataFrame, tauNum: Int = JaccardTauNum,
       tauDen: Int = JaccardTauDen): DataFrame = {
     require(tauNum > 0 && tauDen >= tauNum, "need 0 < tau <= 1")
-    val toks = tokCache.rotate(docs
+    val toks = GraftCache.persisted("Dedup.tok", docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .distinct().persist())
+      .distinct())
     val dfreq = toks.groupBy(col("term")).agg(count(lit(1)).as("df"))
     // DICTIONARY-ENCODE the vocabulary: tid = the term's 1-based rank
     // in the (df asc, term asc) total order, assigned by the GlobalOrder
@@ -892,11 +875,10 @@ object Dedup {
     // prefix self-join AND both verification joins (4 plan references),
     // and the persist also gives the planner its true dimension-relation
     // size so the verification joins broadcast.
-    val byDoc = jacDocCache.rotate(toks.join(dict, Seq("term"))
-      .groupBy(col("doc_id"))
+    val byDoc = GraftCache.persisted("Dedup.jacDoc",
+      toks.join(dict, Seq("term")).groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n"),
-        array_sort(collect_list(col("tid"))).as("ordered"))
-      .persist())
+        array_sort(collect_list(col("tid"))).as("ordered")))
     val lenP = (col("n") -
       expr(s"(n * $tauNum + ${tauDen - 1}) div $tauDen") + 1).cast("int")
     val prefix = byDoc.select(col("doc_id"), col("n"),
@@ -1036,23 +1018,16 @@ object Dedup {
   def containmentJoin(spark: SparkSession, dir: String): DataFrame =
     containmentJoinFrom(Tables(spark, dir).documents)
 
-  /** Bounded cache slots for the containment funnel: the distinct gram
-    * relation feeds FOUR plan arms (sizes, df/hot, pair generation, the
-    * sentinel probe) and the verified pair relation feeds two (the
-    * result rows and the sentinel's emptiness probe) — unpersisted,
-    * every arm recomputed the shingle+distinct pipeline from the scan
-    * (the r20-before plan ran the distinct+df aggregates 8×). */
-  private val contGramCache = new RotatingCache
-  private val contPairCache = new RotatingCache
-
   /** Same, over an arbitrary (doc_id, text) corpus; τ = tauNum/tauDen
     * on the contained side's gram count. */
   private[graft] def containmentJoinFrom(docs: DataFrame, n: Int = 8,
       tauNum: Int = 1, tauDen: Int = 2,
       maxDf: Int = ContainmentGramCap): DataFrame = {
     require(tauNum > 0 && tauDen >= tauNum, "need 0 < tau <= 1")
-    val grams = contGramCache.rotate(spanShingles(docs, n)
-      .select(col("doc_id"), col("h")).distinct().persist())
+    // the distinct grams feed four plan arms (sizes, df/hot, pair
+    // generation, the sentinel probe), the verified pairs two
+    val grams = GraftCache.persisted("Dedup.contGram", spanShingles(docs, n)
+      .select(col("doc_id"), col("h")).distinct())
     val sz = grams.groupBy(col("doc_id")).agg(count(lit(1)).as("size_a"))
     val hot = grams.groupBy(col("h")).agg(count(lit(1)).as("df"))
       .filter(col("df") > maxDf)
@@ -1068,7 +1043,7 @@ object Dedup {
     val byGram = inPlay.groupBy(col("h"))
       .agg(collect_list(col("doc_id")).as("ds"))
       .filter(size(col("ds")) >= 2)
-    val pairs = contPairCache.rotate(byGram
+    val pairs = GraftCache.persisted("Dedup.contPair", byGram
       .select(explode(col("ds")).as("ia"), col("ds"))
       .select(col("ia"), explode(col("ds")).as("ib"))
       .filter(col("ia") =!= col("ib"))
@@ -1077,8 +1052,7 @@ object Dedup {
       .join(sz.withColumnRenamed("doc_id", "ia"), Seq("ia"))
       .filter(col("shared") * tauDen >= col("size_a") * tauNum)
       .withColumn("containment_ppm",
-        expr("shared * 1000000 div size_a"))
-      .persist())
+        expr("shared * 1000000 div size_a")))
     val sentinel = skipped.join(pairs.limit(1), lit(true), "left_anti")
       .select(lit(null).cast("long").as("ia"),
         lit(null).cast("long").as("ib"),

@@ -34,7 +34,7 @@ object GraphOps {
     * aggregate (metadata derivation, not a data-path collect), memoized so
     * a multi-query run (Verify sweeps 11+ graph queries) derives the
     * constant once instead of rescanning `customer` per query. Same
-    * immutable-fixture caveat as [[RotatingCache]]. */
+    * immutable-fixture caveat as [[GraftCache]]. */
   private[graft] val maxCustCache =
     scala.collection.concurrent.TrieMap[String, Long]()
 
@@ -90,19 +90,6 @@ object GraphOps {
   private[graft] def edgeWeightJvm(s: Long, d: Long): Long =
     ((s % 7L) * 3L + d % 7L) % 7L + 1L
 
-  /** GraphX graph per edge relation, memoized on the analyzed edge plan —
-    * the Spark analogue of the reference building its CSR once and
-    * traversing it repeatedly (`loadgraph` then N×`bfsgraph`): repeated
-    * traversals over the same dataset reuse the partitioned, cached graph
-    * instead of re-deriving edges and re-partitioning. At most one graph
-    * retained; a different edge relation evicts the old one. Caveat
-    * (shared with RotatingCache and Spark's CacheManager): plan equality
-    * compares source paths, not contents — do not rewrite a fixture dir
-    * in place within a session. */
-  private var lastGraph: Option[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-     Graph[Long, Long])] = None
-
   /** Edge RDD placed by [[PartitionStrategy.EdgePartition2D]] BEFORE the
     * graph is built — same placement as `graph.partitionBy`, but the
     * vertex routing tables are constructed once against the final edge
@@ -119,43 +106,43 @@ object GraphOps {
       .map(_._2)
   }
 
-  private def toGraph(edges: DataFrame): Graph[Long, Long] = synchronized {
-    val plan = edges.queryExecution.analyzed
-    lastGraph match {
-      case Some((p, g)) if p.sameResult(plan) => g
-      case _ =>
-        lastGraph.foreach(_._2.unpersist(blocking = false))
-        // Partition seam sized by the DATA, not the thread count: every
-        // Pregel superstep pays a fixed per-partition task/shuffle cost,
-        // so a small graph spread over defaultParallelism partitions is
-        // dominated by overhead (measured ~9x on the sf0.1 fixture's
-        // ~300k edges at 32 partitions). AQE used to rescue this by
-        // coalescing the edge DF's final stage; sizing it explicitly —
-        // ~1M edges per partition, floor 1, ceiling defaultParallelism×4
-        // so a 100 TB edge set still fans out — keeps the traversal plan
-        // right with AQE off. The count runs once per memoized graph.
-        val n = edges.count()
-        val parts = math.max(1L, math.min(
-          spark(edges).sparkContext.defaultParallelism.toLong * 4,
-          n / 1000000L + 1)).toInt
-        val edgeRdd = edges.select(col("src"), col("dst")).rdd
-          .map(r => Edge(r.getLong(0), r.getLong(1), 1L))
-          .coalesce(parts)
-        // Pre-partition the edges with the SAME 2D strategy instead of
-        // graph.partitionBy: partitionBy re-shuffles edges AFTER the
-        // graph exists, so the vertex routing tables are rebuilt against
-        // mismatched indexes on first use — every Pregel superstep then
-        // pays the "Joining two VertexPartitions with different indexes
-        // is slow" full-rebuild path. Identical placement (the strategy
-        // maps each edge to the same partition id), routing built once.
-        val g = Graph.fromEdges(
-            prePartitioned(edgeRdd, parts), defaultValue = 0L,
-            edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-            vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
-        lastGraph = Some((plan, g))
-        g
+  /** GraphX graph per edge relation, held in a trained slot — the Spark
+    * analogue of the reference building its CSR once and traversing it
+    * repeatedly (`loadgraph` then N×`bfsgraph`): repeated traversals over
+    * the same dataset reuse the partitioned, cached graph instead of
+    * re-deriving edges and re-partitioning. A different edge relation
+    * unpersists the graph it replaces. */
+  private def toGraph(edges: DataFrame): Graph[Long, Long] =
+    GraftCache.trained("GraphOps.graph", edges, Nil,
+        (g: Graph[Long, Long]) => { g.unpersist(blocking = false); () }) {
+      // Partition seam sized by the DATA, not the thread count: every
+      // Pregel superstep pays a fixed per-partition task/shuffle cost,
+      // so a small graph spread over defaultParallelism partitions is
+      // dominated by overhead (measured ~9x on the sf0.1 fixture's
+      // ~300k edges at 32 partitions). AQE used to rescue this by
+      // coalescing the edge DF's final stage; sizing it explicitly —
+      // ~1M edges per partition, floor 1, ceiling defaultParallelism×4
+      // so a 100 TB edge set still fans out — keeps the traversal plan
+      // right with AQE off. The count runs once per memoized graph.
+      val n = edges.count()
+      val parts = math.max(1L, math.min(
+        spark(edges).sparkContext.defaultParallelism.toLong * 4,
+        n / 1000000L + 1)).toInt
+      val edgeRdd = edges.select(col("src"), col("dst")).rdd
+        .map(r => Edge(r.getLong(0), r.getLong(1), 1L))
+        .coalesce(parts)
+      // Pre-partition the edges with the SAME 2D strategy instead of
+      // graph.partitionBy: partitionBy re-shuffles edges AFTER the
+      // graph exists, so the vertex routing tables are rebuilt against
+      // mismatched indexes on first use — every Pregel superstep then
+      // pays the "Joining two VertexPartitions with different indexes
+      // is slow" full-rebuild path. Identical placement (the strategy
+      // maps each edge to the same partition id), routing built once.
+      Graph.fromEdges(
+          prePartitioned(edgeRdd, parts), defaultValue = 0L,
+          edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
+          vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
     }
-  }
 
   private def spark(df: DataFrame) = df.sparkSession
 
@@ -175,9 +162,6 @@ object GraphOps {
     adjacencyBuildFrom(spark, undirectedEdges(t), maxCust(t))
   }
 
-  /** Bounded cache slot for the aggregated adjacency (see [[RotatingCache]]). */
-  private val adjCache = new RotatingCache
-
   /** Edge-parameterized CSR build (ScaleSmoke runs this on amplified edge
     * sets); `m` bounds the node-id domain for bucket sizing. */
   private[graft] def adjacencyBuildFrom(spark: SparkSession, ue: DataFrame,
@@ -189,8 +173,7 @@ object GraphOps {
         concat_ws(",", sort_array(collect_list(col("dst")))).as("nbrs"))
       // feeds two passes (bucket totals + local prefix); cache so the
       // edge shuffle + aggregation runs once
-      .persist()
-    adjCache.rotate(adj)
+    GraftCache.persisted("GraphOps.adj", adj)
     val nBuckets = math.max(spark.sparkContext.defaultParallelism, 1)
     val width = math.max(1L, (m + nBuckets) / nBuckets) // ceil((m+1)/buckets)
     val bucketed = adj.withColumn("bucket", (col("src") / lit(width)).cast("long"))
@@ -673,29 +656,21 @@ object GraphOps {
   def clusteringCoefficient(spark: SparkSession, dir: String): DataFrame =
     clusteringCoefficientFrom(undirectedEdges(Tables(spark, dir)))
 
-  /** Bounded cache slots for the coefficient's reused relations: `deg`
-    * feeds the orientation AND the final join; `oriented` feeds all
-    * three legs of the wedge self-join — uncached, each leg would
-    * re-derive the edge relation from the fact scan (the q34 count-only
-    * query tolerates that; here the plan audit showed 8 redundant
-    * scans). */
-  private val ccDegCache = new RotatingCache
-  private val ccOriCache = new RotatingCache
-
   /** Same, over an arbitrary undirected edge relation. */
   private[graft] def clusteringCoefficientFrom(ue: DataFrame): DataFrame = {
     val ce = ue.filter(col("src") < col("dst"))
-    val deg = ccDegCache.rotate(ce.select(col("src").as("node"))
+    // `deg` feeds the orientation AND the final join; `oriented` feeds
+    // all three legs of the wedge self-join
+    val deg = GraftCache.persisted("GraphOps.ccDeg",
+      ce.select(col("src").as("node"))
       .union(ce.select(col("dst").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      .persist())
+      .groupBy(col("node")).agg(count(lit(1)).as("deg")))
     val withDeg = ce
       .join(deg.select(col("node").as("src"), col("deg").as("ds")), "src")
       .join(deg.select(col("node").as("dst"), col("deg").as("dd")), "dst")
-    val oriented = ccOriCache.rotate(withDeg.select(
+    val oriented = GraftCache.persisted("GraphOps.ccOri", withDeg.select(
       when(col("ds") <= col("dd"), col("src")).otherwise(col("dst")).as("u"),
-      when(col("ds") <= col("dd"), col("dst")).otherwise(col("src")).as("v"))
-      .persist())
+      when(col("ds") <= col("dd"), col("dst")).otherwise(col("src")).as("v")))
     val e1 = oriented.select(col("u").as("a"), col("v").as("b"))
     val e2 = oriented.select(col("u").as("a"), col("v").as("c"))
     val e3 = oriented.select(col("u").as("b"), col("v").as("c"))
@@ -744,22 +719,13 @@ object GraphOps {
     * bounds the degree of mid (wedge-center) nodes: hubs above the cap
     * contribute NO wedges (their skipped mass is reported instead), so
     * a power-law hub cannot make one task quadratic in its degree. */
-  /** Bounded cache slot for the hot-mid list: `hot` feeds both the
-    * skipped-mass summary and the anti-join, and a bare `.persist()`
-    * would leak one cached plan per call for the session lifetime (the
-    * RotatingCache doc's exact accumulation); the rotate bounds it to
-    * one live slot, matching every other reused relation in this file.
-    * The list stays DISTRIBUTED — on a power-law web graph the >cap hub
-    * set can be millions of nodes, so a driver collect/isin is not the
-    * scale-safe shape here. */
-  private val twoHopHotCache = new RotatingCache
-
   private[graft] def twoHopCountsFrom(
       ue: DataFrame, midDegCap: Int = Int.MaxValue): DataFrame = {
-    val hot = twoHopHotCache.rotate(
+    // `hot` feeds the skipped-mass summary and the anti-join; it stays
+    // distributed (a power-law graph's >cap hub set can be millions)
+    val hot = GraftCache.persisted("GraphOps.twoHopHot",
       ue.groupBy(col("src").as("b")).agg(count(lit(1)).as("_mdeg"))
-        .filter(col("_mdeg") > midDegCap)
-        .persist())
+        .filter(col("_mdeg") > midDegCap))
     val capped = hot.agg(
       count(lit(1)).as("n_capped_mids"),
       coalesce(sum(col("_mdeg") * (col("_mdeg") - lit(1L))), lit(0L))

@@ -25,15 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
-  /** Bounded cache slot for the decoded (doc_id, phash) fingerprint
-    * relation (see [[RotatingCache]]): the q188 funnel references it
-    * from four plan arms (hot bands, both self-join sides, the
-    * empty-pair sentinel probe) — without the persist each arm re-runs
-    * the mapPartitions image decode. The fingerprints are 64 bits per
-    * image, orders of magnitude below payload scale, so the persist is
-    * cheap at any corpus size. */
-  private val phashCache = new RotatingCache
-
   /** Documents with a synthetic binary payload column (the fixture set has
     * no media blobs; text bytes stand in — the engine-side plumbing is
     * identical). */
@@ -369,7 +360,7 @@ object Multimodal {
         rows.flatMap { case (id, payload) => PpmDecoder.aHash(id, payload) }
       }
       .toDF("doc_id", "phash", "phash64")
-      .transform(df => phashCache.rotate(df.persist()))
+      .transform(GraftCache.persisted("Multimodal.phash", _))
   }
 
   /** Banding geometry and caps for q188 — mirrored literally in the

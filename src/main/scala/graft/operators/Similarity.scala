@@ -28,9 +28,6 @@ object Similarity {
   private[graft] def dot(a: Column, b: Column): Column =
     graft.functions.DotProduct.dot_product(a, b)
 
-  /** Bounded cache slot for the near-dup normed scan (see [[RotatingCache]]). */
-  private val normCache = new RotatingCache
-
   private def norm(a: Column): Column = sqrt(dot(a, a))
 
   private def withNorm(df: DataFrame): DataFrame =
@@ -293,10 +290,6 @@ object Similarity {
       .orderBy(col("query_id"), col("rnk"))
   }
 
-  /** Bounded cache slot for the semantic-dedup cell assignment (feeds the
-    * hot-cell count, both self-join sides and the output projection). */
-  private val cellCache = new RotatingCache
-
   /** Hierarchical (two-level) cell assignment: argmax over ceil(√K)
     * super-directions (the first √K centroids, a small inlined array
     * expression), then argmax over only the centroids belonging to that
@@ -437,7 +430,8 @@ object Similarity {
     val spark = vecs.sparkSession
     import spark.implicits._
     val cents = centroidDirs(vecs, k)
-    val asg = cellCache.rotate(assignCellsFlatAuto(vecs, cents).persist())
+    val asg = GraftCache.persisted("Similarity.cell",
+      assignCellsFlatAuto(vecs, cents))
     val hot = asg.groupBy(col("cell")).agg(count(lit(1)).as("_csz"))
       .filter(col("_csz") > maxCell)
     val hotCells = hot.select(col("cell"))
@@ -499,7 +493,7 @@ object Similarity {
       // scale — bit-compatible, see assignCellsFlatBcast
       if (!twoLevel) df => assignCellsFlatAuto(df, cents)
       else df => withTwoLevelCell(df, cents)
-    val asg = cellCache.rotate(cellExpr(vecs).persist())
+    val asg = GraftCache.persisted("Similarity.cell", cellExpr(vecs))
     val hot = asg.groupBy(col("cell")).agg(count(lit(1)).as("_csz"))
       .filter(col("_csz") > maxCell)
     val hotCells = hot.select(col("cell"))
@@ -559,7 +553,7 @@ object Similarity {
     * generation and reported as skipped mass. */
   def embeddingNearDupSummaryFrom(vecs: DataFrame, tau: Double,
       maxBucket: Int = 1000): DataFrame = {
-    val e = normCache.rotate(withNorm(vecs).persist())
+    val e = GraftCache.persisted("Similarity.norm", withNorm(vecs))
     // materialization barrier: the normed scan feeds both self-join sides
     // — and one row per vector, so this count IS the corpus size
     val nVecs = e.count()
@@ -616,10 +610,6 @@ object Similarity {
     // asserted in QuantKernelsSpec
     vecs.select(col("vec_id"),
       graft.functions.QuantKernels.quantize_vec(col("embedding")).as("e"))
-
-  /** Bounded cache slot for the quantized-embedding scan (see
-    * [[RotatingCache]]) — it feeds every Lloyd iteration. */
-  private val kmCache = new RotatingCache
 
   /** Exact distributed k-means (q142) — Lloyd iterations in FIXED-POINT
     * integer arithmetic, the quantizer-TRAINING step the SemDeDup/IVF
@@ -755,7 +745,7 @@ object Similarity {
     * dims) the centroids ride a broadcast relation instead of a
     * Catalyst literal tree. */
   def kmeansCellsFrom(vecs: DataFrame, k: Int, iters: Int): DataFrame = {
-    val eq = kmCache.rotate(quantized(vecs).persist())
+    val eq = GraftCache.persisted("Similarity.km", quantized(vecs))
     val cents = trainQuantizedCents(eq, k, iters)
     assignQuantizedCells(eq, cents)
       .select(col("vec_id"), col("cell"), col("dist_q"))
@@ -767,7 +757,7 @@ object Similarity {
     * is a straggler task for every query probing it at 100 TB. */
   private[graft] def coarseCellPopulations(vecs: DataFrame, k: Int,
       coarseIters: Int): DataFrame = {
-    val eqd = pqCache.rotate(quantized(vecs).persist())
+    val eqd = GraftCache.persisted("Similarity.pq", quantized(vecs))
     val coarse = trainQuantizedCents(eqd, k, coarseIters)
     assignQuantizedCells(eqd, coarse)
       .groupBy(col("cell")).agg(count(lit(1)).as("n"))
@@ -836,19 +826,6 @@ object Similarity {
 
   // --------------------------------------- product quantization + ADC
 
-  /** Bounded cache slot for the PQ-quantized scan. */
-  private val pqCache = new RotatingCache
-
-  /** Train-once-freeze slots for the IVF coarse cells and the PQ
-    * codebook (see [[TrainedCache]]) — re-training per query batch
-    * would rerun 5 + 10 full-corpus Lloyd passes for every call.
-    * The RESIDUAL codebook gets its own slot: it depends on the coarse
-    * quantizer (k, coarseIters) as well as the Lloyd rounds, so its
-    * cache key carries all three. */
-  private val coarseCache = new TrainedCache[Array[Array[Long]]]
-  private val cbCache = new TrainedCache[Array[Array[Array[Long]]]]
-  private val cbResCache = new TrainedCache[Array[Array[Array[Long]]]]
-
   /** Product-quantization ANN with asymmetric distance (q148) — the
     * memory-scale path of embedding search: each 64-dim vector is split
     * into M=4 sub-vectors of 16 dims, each sub-vector quantized to its
@@ -906,7 +883,7 @@ object Similarity {
     * codebook becomes a broadcast (m, j, cw) relation. */
   private def pqEncode(vecs: DataFrame,
       queryMod: Long): (DataFrame, DataFrame) = {
-    val eq = pqCache.rotate(quantized(vecs).persist())
+    val eq = GraftCache.persisted("Similarity.pq", quantized(vecs))
     // codebook: sub-vectors of the PqK lowest-id vectors — metadata collect
     val seeds: Array[Array[Long]] = eq.orderBy(col("vec_id")).limit(PqK)
       .collect().map(_.getSeq[Long](1).toArray)
@@ -1134,8 +1111,9 @@ object Similarity {
     * dispatch. */
   private def pqEncodeTrained(vecs: DataFrame, queryMod: Long,
       iters: Int): (DataFrame, DataFrame) = {
-    val eqd = pqCache.rotate(quantized(vecs).persist())
-    val cb = cbCache.getOrTrain(eqd, Seq(iters))(pqTrainCodebook(eqd, iters))
+    val eqd = GraftCache.persisted("Similarity.pq", quantized(vecs))
+    val cb = GraftCache.trained("Similarity.cb", eqd, Seq(iters))(
+      pqTrainCodebook(eqd, iters))
     if (cbFitsInline(cb))
       pqEncodeLit(eqd, cb, queryMod)
     else pqEncodeBcast(eqd, cb, queryMod)
@@ -1223,8 +1201,8 @@ object Similarity {
     // corpus assignment and query probes are integer L2 — bit-stable,
     // and the oracle replays the coarse training unroll exactly like
     // the PQ one.
-    val eqd = pqCache.rotate(quantized(vecs).persist())
-    val coarse = coarseCache.getOrTrain(eqd,
+    val eqd = GraftCache.persisted("Similarity.pq", quantized(vecs))
+    val coarse = GraftCache.trained("Similarity.coarse", eqd,
         Seq(k, coarseIters, sampleMod.toInt))(
       trainQuantizedCents(eqd, k, coarseIters, sampleMod))
     val assigned = assignQuantizedCells(eqd, coarse)
@@ -1232,7 +1210,7 @@ object Similarity {
     // and encodes x − centroid(cell(x)); its cache key carries the
     // coarse rung (k, coarseIters) the residuals depend on.
     val res = residualize(assigned, coarse)
-    val cb = cbResCache.getOrTrain(eqd,
+    val cb = GraftCache.trained("Similarity.cbRes", eqd,
         Seq(trainIters, k, coarseIters, pqM, pqSub, sampleMod.toInt))(
       pqTrainCodebook(res.select(col("vec_id"), col("e")), trainIters,
         sampleMod, pqM = pqM, pqSub = pqSub))
@@ -1274,12 +1252,12 @@ object Similarity {
       coarseIters: Int = IvfCoarseIters,
       trainIters: Int = PqTrainIters, sampleMod: Long = 1L)
       : (Array[Array[Long]], Array[Array[Array[Long]]]) = {
-    val eqd = pqCache.rotate(quantized(vecs).persist())
-    val coarse = coarseCache.getOrTrain(eqd,
+    val eqd = GraftCache.persisted("Similarity.pq", quantized(vecs))
+    val coarse = GraftCache.trained("Similarity.coarse", eqd,
         Seq(k, coarseIters, sampleMod.toInt))(
       trainQuantizedCents(eqd, k, coarseIters, sampleMod))
     val cbEqd = assignQuantizedCells(eqd, coarse)
-    val cb = cbResCache.getOrTrain(eqd,
+    val cb = GraftCache.trained("Similarity.cbRes", eqd,
         Seq(trainIters, k, coarseIters, sampleMod.toInt))(
       pqTrainCodebook(residualize(cbEqd, coarse)
         .select(col("vec_id"), col("e")), trainIters, sampleMod))
@@ -1369,7 +1347,7 @@ object Similarity {
     val (codes, luts) = pqEncodeTrained(vecs, queryMod, trainIters)
     val approx = adcRank(codes, luts, topK = 3)
       .select(col("query_id"), col("neighbor_id"))
-    val eq = pqCache.rotate(quantized(vecs).persist())
+    val eq = GraftCache.persisted("Similarity.pq", quantized(vecs))
     val queries = eq.filter(col("vec_id") % queryMod === 0)
       .select(col("vec_id").as("query_id"), col("e").as("qe"))
     val wq = Window.partitionBy(col("query_id"))
@@ -1434,7 +1412,7 @@ object Similarity {
     val short = ivfAdcTopKFrom(vecs, topK = shortlist, queryMod = queryMod,
         nprobe = nprobe)
       .select(col("query_id"), col("neighbor_id"))
-    val eq = pqCache.rotate(quantized(vecs).persist())
+    val eq = GraftCache.persisted("Similarity.pq", quantized(vecs))
     val queries = eq.filter(col("vec_id") % queryMod === 0)
       .select(col("vec_id").as("query_id"), col("e").as("qe"))
     val wq = Window.partitionBy(col("query_id"))
@@ -1485,7 +1463,7 @@ object Similarity {
   /** Same, over an arbitrary (vec_id, embedding) relation. */
   private[graft] def hardNegativesFrom(vecs: DataFrame): DataFrame = {
     val pool = ivfAdcRerankTopKFrom(vecs, topK = RerankShortlist)
-    val eq = pqCache.rotate(quantized(vecs).persist())
+    val eq = GraftCache.persisted("Similarity.pq", quantized(vecs))
     val queries = eq.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("query_id"), col("e").as("qe"))
     val wp = Window.partitionBy(col("query_id"))
@@ -1534,8 +1512,9 @@ object Similarity {
   private[graft] def clusterBalancedSampleFrom(vecs: DataFrame,
       k: Int = 16, quota: Int = ClusterSampleQuota,
       coarseIters: Int = IvfCoarseIters): DataFrame = {
-    val eqd = pqCache.rotate(quantized(vecs).persist())
-    val coarse = coarseCache.getOrTrain(eqd, Seq(k, coarseIters))(
+    val eqd = GraftCache.persisted("Similarity.pq", quantized(vecs))
+    val coarse = GraftCache.trained("Similarity.coarse", eqd,
+        Seq(k, coarseIters))(
       trainQuantizedCents(eqd, k, coarseIters))
     val w = Window.partitionBy(col("cell"))
       .orderBy(col("u"), col("vec_id"))
@@ -1594,8 +1573,6 @@ object Similarity {
       .orderBy(col("query_id"), col("rk"))
   }
 
-  private val storedIndexCache = new RotatingCache
-
   /** Store-backed RAG serving (q231) — q223's build/serve SPLIT, the
     * deployment posture: BUILD trains the quantizer and encodes the
     * chunk corpus into a persisted (vec_id, cell, codes) index ONCE
@@ -1626,8 +1603,8 @@ object Similarity {
       docs: DataFrame, emb: DataFrame, topK: Int = AnnTopK): DataFrame = {
     val cv = chunkVectors(docs, emb)
     val (coarse, cb) = ivfAdcTrain(cv)
-    val stored = storedIndexCache.rotate(
-      ivfAdcEncode(cv, coarse, cb).persist())
+    val stored = GraftCache.persisted("Similarity.storedIndex",
+      ivfAdcEncode(cv, coarse, cb))
     val queries = cv.filter(col("vec_id") % 50 === 0)
     ivfAdcServe(stored, queries, coarse, cb, topK = topK)
       .select(col("query_id"), col("rk"),
@@ -1740,7 +1717,7 @@ object Similarity {
       .filter(col("rk") <= d)
       .select(col("query_id"), cid.as("cand"))
     val cv = chunkVectors(docs, emb)
-    val eq = pqCache.rotate(quantized(cv).persist())
+    val eq = GraftCache.persisted("Similarity.pq", quantized(cv))
     val queries = eq.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("query_id"), col("e").as("qe"))
     val wq = Window.partitionBy(col("query_id"))
@@ -1798,7 +1775,7 @@ object Similarity {
 
   /** Same, over an arbitrary (vec_id, embedding) relation. */
   private[graft] def mrlPrefixRecallFrom(vecs: DataFrame): DataFrame = {
-    val eq = pqCache.rotate(quantized(vecs).persist())
+    val eq = GraftCache.persisted("Similarity.pq", quantized(vecs))
     val queries = eq.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("query_id"), col("e").as("qe"))
     def dist(d: Int): Column = graft.functions.QuantKernels.vec_l2q(
@@ -1894,8 +1871,9 @@ object Similarity {
     * — the q244/q247 read-mass column. */
   private def mrlLutReads(corpus: DataFrame, m: Int, out: String,
       queryMod: Long): DataFrame = {
-    val eqd = pqCache.rotate(quantized(corpus).persist())
-    val coarse = coarseCache.getOrTrain(eqd, Seq(16, IvfCoarseIters))(
+    val eqd = GraftCache.persisted("Similarity.pq", quantized(corpus))
+    val coarse = GraftCache.trained("Similarity.coarse", eqd,
+        Seq(16, IvfCoarseIters))(
       trainQuantizedCents(eqd, 16, IvfCoarseIters))
     val sizes = assignQuantizedCells(eqd, coarse)
       .groupBy(col("cell")).agg(count(lit(1)).as("n"))
@@ -1910,7 +1888,7 @@ object Similarity {
     * q46 brute-force shape, shared by q244/q247. */
   private def mrlExactTruth(planted: DataFrame,
       queryMod: Long): (DataFrame, DataFrame) = {
-    val eq = pqCache.rotate(quantized(planted).persist())
+    val eq = GraftCache.persisted("Similarity.pq", quantized(planted))
     val queries = eq.filter(col("vec_id") % queryMod === 0)
       .select(col("vec_id").as("query_id"), col("e").as("qe"))
     val wq = Window.partitionBy(col("query_id"))
@@ -1994,8 +1972,6 @@ object Similarity {
       .orderBy(col("query_id"))
   }
 
-  private val lexTruthCache = new RotatingCache
-
   /** Lexical-truth retrieval-quality gate (q240) — q232's complement,
     * completing the two-regime eval: q232's planted relevance IS
     * embedding similarity, and its measured reading (SCALING.md) shows
@@ -2036,8 +2012,8 @@ object Similarity {
     val fused = hybridRrfFrom(spark, docs, emb)
       .filter(col("rk") <= d)
       .select(col("query_id"), cid.as("cand"))
-    val dtok = lexTruthCache.rotate(TextAnalysis.bm25Postings(docs)
-      .select(col("cid"), col("t")).distinct().persist())
+    val dtok = GraftCache.persisted("Similarity.lexTruth",
+      TextAnalysis.bm25Postings(docs).select(col("cid"), col("t")).distinct())
     val sizes = dtok.groupBy(col("cid")).agg(count(lit(1)).as("sz"))
     val qt = dtok.filter(col("cid") % 50 === 0)
       .select(col("cid").as("query_id"), col("t"))
@@ -2102,7 +2078,7 @@ object Similarity {
     val cand = ivfAdcRerankTopKFrom(cv, topK = MmrShortlist)
       .select(col("query_id"), col("neighbor_id"), col("exact_dist"))
       .localCheckpoint(true)
-    val eqv = pqCache.rotate(quantized(cv).persist())
+    val eqv = GraftCache.persisted("Similarity.pq", quantized(cv))
       .select(col("vec_id"), col("e"))
     // pairwise exact L2 inside each query's candidate pool — ≤ s²
     // rows per query, metadata (lineage cut so the greedy rounds
@@ -2236,7 +2212,7 @@ object Similarity {
         nprobe = nprobe, trainIters = trainIters,
         coarseIters = coarseIters, sampleMod = sampleMod)
       .select(col("query_id"), col("neighbor_id"))
-    val eq = pqCache.rotate(quantized(vecs).persist())
+    val eq = GraftCache.persisted("Similarity.pq", quantized(vecs))
     val queries = eq.filter(col("vec_id") % queryMod === 0)
       .select(col("vec_id").as("query_id"), col("e").as("qe"))
     val wq = Window.partitionBy(col("query_id"))

@@ -67,10 +67,6 @@ object Sources {
     all.union(repeat).orderBy(col("metric"))
   }
 
-  /** Bounded cache slot for the hot aggregate (see [[RotatingCache]]) — a
-    * session sweeping several scale dirs keeps at most one entry. */
-  private val hotCache = new RotatingCache
-
   /** The persisted hot table backing [[cachedReuse]] — exposed so tests can
     * pin InMemoryRelation in dependent plans and exercise unpersist. */
   def hotAggregate(spark: SparkSession, dir: String): DataFrame = {
@@ -79,9 +75,7 @@ object Sources {
       .agg(
         count(lit(1)).as("n_orders"),
         sum(round(col("o_totalprice") * 100).cast("long")).as("cents"))
-      .persist()
-    hotCache.rotate(hot)
-    hot
+    GraftCache.persisted("Sources.hot", hot)
   }
 
   /** Schema-on-read TEXT ingestion — the reference's string-parser surface

@@ -346,9 +346,6 @@ object TextAnalysis {
   def tfidfTopK(spark: SparkSession, dir: String, k: Int = 3): DataFrame =
     tfidfTopKFrom(Tables(spark, dir).documents, k)
 
-  private val tfCache = new RotatingCache
-  private val lmCache = new RotatingCache
-
   /** Unigram-LM surprisal scoring (q143) — the CCNet-style language-model
     * quality signal without an external model: the corpus's own unigram
     * distribution IS the model, each document scores the total
@@ -371,9 +368,8 @@ object TextAnalysis {
 
   /** Same, over an arbitrary (doc_id, text) corpus. */
   def unigramSurprisalFrom(docs: DataFrame): DataFrame = {
-    val toks = lmCache.rotate(docs.select(col("doc_id"),
-        explode(split(col("text"), " ")).as("term"))
-      .persist())
+    val toks = GraftCache.persisted("TextAnalysis.lm",
+      docs.select(col("doc_id"), explode(split(col("text"), " ")).as("term")))
     val cnt = toks.groupBy(col("term")).agg(count(lit(1)).as("c"))
     val tot = toks.agg(count(lit(1)).as("t"))
     toks.groupBy(col("doc_id"), col("term"))
@@ -388,9 +384,6 @@ object TextAnalysis {
       .withColumn("mean_surprisal_q", expr("surprisal_q div n_tokens"))
       .orderBy(col("doc_id"))
   }
-
-  private val bgCache = new RotatingCache
-  private val bmCache = new RotatingCache
 
   /** BM25 top-k and the stopword df cut — mirrored in the oracle. */
   private[graft] val Bm25TopK = 5
@@ -525,7 +518,7 @@ object TextAnalysis {
       topK: Int = Bm25TopK, queryMod: Long = 50L,
       termBound: Int = Bm25QueryTermBound,
       postingBound: Int = Bm25PostingBound): DataFrame = {
-    val cc = bmCache.rotate(postings.persist())
+    val cc = GraftCache.persisted("TextAnalysis.bm", postings)
     val (nChunks, avgdl) = bm25CorpusStats(cc)
     val idf = bm25IdfOf(cc, nChunks)
     val qTerms = cc.filter(col("cid") % queryMod === 0)
@@ -545,8 +538,7 @@ object TextAnalysis {
     // oracle's, so rank-thresholding it (impact desc, cid tie-break)
     // keeps identical sets cross-engine. One shared entry point
     // ([[bm25KeptFor]]) dispatches the stored-rank fast path (q246's
-    // compacted store) vs the inline two-phase rank, guards both, and
-    // computes the prune audit both ways.
+    // compacted store) vs the inline two-phase rank and guards both.
     val kept = bm25KeptFor(cc, idf, avgdl, postingBound)
       .select(col("t"), col("cid").as("cand"), col("impact"))
     val wq = Window.partitionBy(col("query_id"))
@@ -564,45 +556,51 @@ object TextAnalysis {
       .orderBy(col("query_id"), col("rk"))
   }
 
-  /** The last serve's prune audit — the q243 kept/skipped split at
-    * the SERVED corpus's shape plus which prune path ran, published so
-    * a deployment sees what the bound is dropping on ITS data without
-    * a separate audit query. Lazy (an unexecuted plan over the
-    * persisted posting relation): reading it costs one vocabulary-
-    * scale aggregate; never reading it costs nothing. */
-  @volatile private var lastAuditVar: Option[DataFrame] = None
-  def lastServeAudit: Option[DataFrame] = lastAuditVar
+  /** Whether a posting relation carries q246's materialized `prk`
+    * annotation — the predicate the serve dispatches on. */
+  private def storedRank(cc: DataFrame): Boolean = cc.columns.contains("prk")
+
+  /** A serve's prune audit — the q243 kept/skipped split at the SERVED
+    * relation's shape plus which prune path a serve over it takes, so a
+    * deployment sees what the bound is dropping on ITS data without a
+    * separate audit query. Lazy: reading it costs one vocabulary-scale
+    * aggregate; never building it costs nothing. */
+  private[graft] def bm25ServeAudit(postings: DataFrame,
+      bound: Int): DataFrame =
+    bm25PruneAuditOf(postings.select(col("cid"), col("t")), bound)
+      .withColumn("prune_path",
+        lit(if (storedRank(postings)) "stored_rank" else "inline_rank"))
 
   /** The ONE kept-posting entry point both serve paths go through —
-    * the guard and the audit live here so the two paths cannot
-    * diverge. Stored-rank path (the relation carries q246's
-    * materialized `prk` annotation): validate the requested bound
-    * against the bound the store was ACTUALLY compacted with (the
-    * row-constant `pbound` column the annotation writes — NOT the
-    * current compile-time constant, which a later build could raise
-    * and silently serve truncated prefixes from an old store), then
-    * filter the stored rank. Inline path: the two-phase salted rank.
-    * Either way [[lastServeAudit]] gets the q243 kept/skipped split
-    * over this corpus at this bound, tagged with the path taken. */
+    * the guard lives here so the two paths cannot diverge, and it
+    * dispatches on the same predicate as [[bm25ServeAudit]].
+    * Stored-rank path (the relation carries q246's materialized `prk`
+    * annotation): validate the requested bound against the bound the
+    * store was ACTUALLY compacted with (the row-constant `pbound`
+    * column the annotation writes — NOT the current compile-time
+    * constant, which a later build could raise and silently serve
+    * truncated prefixes from an old store), then filter the stored
+    * rank. Inline path: the two-phase salted rank. */
   private[graft] def bm25KeptFor(cc: DataFrame, idf: DataFrame,
       avgdl: Double, postingBound: Int): DataFrame = {
-    val stored = cc.columns.contains("prk")
-    lastAuditVar = Some(
-      bm25PruneAuditOf(cc.select(col("cid"), col("t")), postingBound)
-        .withColumn("prune_path",
-          lit(if (stored) "stored_rank" else "inline_rank")))
-    if (stored) {
+    if (storedRank(cc)) {
       // The compacted bound rides in the pbound FIELD METADATA (written
       // once at compaction; parquet persists field metadata in its
       // footer schema), so the serve guard reads it driver-side with no
       // job — a per-serve store scan for one row-constant is exactly
       // the driver-action-on-the-query-path anti-pattern (guide §5).
-      // Stores without the metadata (pre-pbound legacy) were
-      // necessarily compacted with the compile-time constant.
-      val storedBound = cc.schema.find(_.name == "pbound")
-        .filter(_.metadata.contains(PboundMetaKey))
-        .map(_.metadata.getLong(PboundMetaKey))
-        .getOrElse(Bm25PostingBound.toLong)
+      // A legacy store without the metadata still carries the bound in
+      // its row-constant column, read with one job; only a store with
+      // no pbound column at all predates the bound and was necessarily
+      // compacted with the compile-time constant.
+      val storedBound = cc.schema.find(_.name == "pbound") match {
+        case Some(f) if f.metadata.contains(PboundMetaKey) =>
+          f.metadata.getLong(PboundMetaKey)
+        case Some(_) =>
+          val r = cc.agg(min(col("pbound"))).head()
+          if (r.isNullAt(0)) Bm25PostingBound.toLong else r.getLong(0)
+        case None => Bm25PostingBound.toLong
+      }
       require(postingBound <= storedBound,
         s"store was compacted with posting ranks only to prk <= " +
           s"$storedBound; asked for $postingBound — recompact or rank " +
@@ -700,7 +698,7 @@ object TextAnalysis {
     bm25PruneAuditOf(bm25Postings(docs), postingBound)
 
   /** The audit itself, over a POSTING relation — shared by q243 (one-
-    * shot corpus report) and [[bm25KeptFor]] (the per-serve summary),
+    * shot corpus report) and [[bm25ServeAudit]] (the per-serve summary),
     * so the report a deployment plans with and the split a serve
     * publishes are the same construction by definition. */
   private[graft] def bm25PruneAuditOf(postings: DataFrame,
@@ -757,7 +755,7 @@ object TextAnalysis {
 
   /** Same, over an arbitrary (doc_id, text) corpus. */
   def bigramSurprisalFrom(docs: DataFrame): DataFrame = {
-    val pairs = bgCache.rotate(adjacentPairs(docs).persist())
+    val pairs = GraftCache.persisted("TextAnalysis.bg", adjacentPairs(docs))
     val cb = pairs.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("cb"))
     val cp = pairs.groupBy(col("w1")).agg(count(lit(1)).as("cp"))
@@ -779,11 +777,10 @@ object TextAnalysis {
     val d = docs.select(col("doc_id"), col("text"))
     // persisted barrier: tf feeds BOTH the df aggregation and the scored
     // join — without it the token explode + (doc,term) shuffle runs twice
-    val tf = tfCache.rotate(d.select(col("doc_id"),
+    val tf = GraftCache.persisted("TextAnalysis.tf", d.select(col("doc_id"),
         explode(split(col("text"), " ")).as("term"))
       .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .persist())
+      .agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val nDocs = d.agg(count(lit(1)).as("n_docs"))
     val w = org.apache.spark.sql.expressions.Window
@@ -800,21 +797,6 @@ object TextAnalysis {
         col("tfidf_q"))
       .orderBy(col("doc_id"), col("term"))
   }
-
-  /** Vocabulary frequency spectrum (q177) — the Zipf/Heaps readout a
-    * corpus audit runs before tokenizer training: for each term
-    * frequency class k (1..10, then an 11+ tail bucket), how many
-    * DISTINCT terms occur exactly k times (k=1 is the hapax count — the
-    * misspelling/noise mass) and how many tokens that class carries.
-    * Whitespace tokens, the same rule as the surprisal/TF-IDF tier, so
-    * the spectra compose.
-    *
-    * Scale shape: a double aggregation — token explode → per-term
-    * counts (term-keyed, map-side combinable), then counts-of-counts
-    * over the TERM relation (vocabulary scale, far below token scale) —
-    * the classic frequency-of-frequencies shape; result is ≤ 11 rows. */
-  private val lmqCache = new RotatingCache
-  private val lmqBucketCache = new RotatingCache
 
   /** Reference slice selector for the LM quality filter (q235) —
     * mirrored in the oracle: documents with doc_id % LmRefMod == 0
@@ -866,7 +848,7 @@ object TextAnalysis {
   private[graft] def lmQualityBucketsFrom(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val pairs = lmqCache.rotate(adjacentPairs(docs).persist())
+    val pairs = GraftCache.persisted("TextAnalysis.lmq", adjacentPairs(docs))
     val ref = pairs.filter(col("doc_id") % LmRefMod === 0)
     val cb = ref.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cb"))
     val cp = ref.groupBy(col("w1")).agg(count(lit(1)).as("cp"))
@@ -887,10 +869,9 @@ object TextAnalysis {
       .agg(sum(col("tf")).as("n_bigrams"),
         sum(col("tf") * col("q")).as("surprisal_q"))
       .withColumn("mean_surprisal_q", expr("surprisal_q div n_bigrams"))
-    val bucketed = lmqBucketCache.rotate(GlobalOrder
+    val bucketed = GraftCache.persisted("TextAnalysis.lmqBucket", GlobalOrder
       .bucketizeForUniqueOrder(ds, col("mean_surprisal_q"),
-        desc = false, col("doc_id"))
-      .persist())
+        desc = false, col("doc_id")))
     val (bases, totals) = GlobalOrder.exclusiveOffsets(bucketed,
       Seq(count(lit(1)).as("cnt")))
     val total = totals.head
@@ -908,6 +889,18 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
+  /** Vocabulary frequency spectrum (q177) — the Zipf/Heaps readout a
+    * corpus audit runs before tokenizer training: for each term
+    * frequency class k (1..10, then an 11+ tail bucket), how many
+    * DISTINCT terms occur exactly k times (k=1 is the hapax count — the
+    * misspelling/noise mass) and how many tokens that class carries.
+    * Whitespace tokens, the same rule as the surprisal/TF-IDF tier, so
+    * the spectra compose.
+    *
+    * Scale shape: a double aggregation — token explode → per-term
+    * counts (term-keyed, map-side combinable), then counts-of-counts
+    * over the TERM relation (vocabulary scale, far below token scale) —
+    * the classic frequency-of-frequencies shape; result is ≤ 11 rows. */
   def vocabularySpectrum(spark: SparkSession, dir: String): DataFrame =
     vocabularySpectrumFrom(Tables(spark, dir).documents)
 

@@ -111,11 +111,6 @@ object Windows {
       .orderBy(col("o_orderkey"))
   }
 
-  /** Bounded cache slot for the bucketed ranking input (see
-    * [[RotatingCache]]) — it feeds two passes (bucket totals + local
-    * ranks), so the scan + bucketing runs once. */
-  private val rankCache = new RotatingCache
-
   /** Ranking battery: rank / dense_rank / ntile / percent_rank over a
     * global total order — DISTRIBUTED. An unpartitioned `Window.orderBy`
     * funnels the whole table into ONE task (exactly what global quantile
@@ -143,8 +138,7 @@ object Windows {
     // descending order ⇒ bucket 0 holds the largest values
     val bucketed = GlobalOrder
       .bucketizeByValue(cust, col("cents"), desc = true)
-      .persist()
-    rankCache.rotate(bucketed)
+    GraftCache.persisted("Windows.rank", bucketed)
     // pass 1: per-bucket (row count, distinct-ordering-key count) →
     // exclusive cumulative bases, computed on ≤ #buckets rows
     val (bases, totals) = GlobalOrder.exclusiveOffsets(bucketed, Seq(

@@ -40,14 +40,8 @@ object bridge {
     * face of the extension surface (SURVEY §2.k). */
   def registerFunctions(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("poly_hash",
-      exprs => graft.functions.PolyHash(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("simhash64",
-      exprs => graft.functions.SimHash64(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_sig",
-      exprs => graft.functions.MinHashSig(exprs.head).toAggregateExpression(),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("winnow_fps",
-      exprs => graft.functions.WinnowFps(exprs.head), "scala_udf")
+    _root_.graft.GraftExtensions.functions.foreach { case (name, _, builder) =>
+      reg.createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
   }
 }

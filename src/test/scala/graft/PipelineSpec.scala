@@ -91,6 +91,26 @@ class PipelineSpec extends AnyFunSuite {
         org.apache.spark.sql.catalyst.expressions.Literal.create("hello"),
         org.apache.spark.sql.catalyst.expressions.Literal.create(0L)).eval(null)
       assert(r.getLong(0) == direct)
+      // every name of the one registry list resolves through BOTH paths:
+      // the extension (s2) and bridge.registerFunctions on a session
+      // whose injected copies were dropped first
+      val args = Map("poly_hash" -> "'hello', 0",
+        "simhash64" -> "array('a', 'b')", "minhash_sig" -> "'hello'",
+        "winnow_fps" -> "'hello world'")
+      def resolves(s: SparkSession, name: String): Boolean =
+        s.catalog.functionExists(name) &&
+          s.sql(s"SELECT $name(${args(name)})").queryExecution
+            .analyzed.resolved
+      val names = graft.GraftExtensions.functions.map(_._1)
+      assert(names.toSet == args.keySet)
+      names.foreach(n => assert(resolves(s2, n), s"extension: $n"))
+      val s3 = s2.newSession()
+      names.foreach { n =>
+        s3.sql(s"DROP TEMPORARY FUNCTION $n")
+        assert(!s3.catalog.functionExists(n), n)
+      }
+      org.apache.spark.sql.graft.bridge.registerFunctions(s3)
+      names.foreach(n => assert(resolves(s3, n), s"bridge: $n"))
       // do NOT s2.stop(): the SparkContext is shared with the suite session
     } finally {
       SparkSession.setDefaultSession(orig); SparkSession.setActiveSession(orig)
@@ -1750,19 +1770,19 @@ class PipelineSpec extends AnyFunSuite {
         r.getLong(4), r.getString(5))
     }
     val want = TextAnalysis.bm25PruneReportFrom(docs).collect().head
-    // inline path: constructing the serve publishes the audit
-    TextAnalysis.bm25TopKFrom(docs)
-    val inl = auditRow(TextAnalysis.lastServeAudit.get)
+    // inline path: the audit of the relation the one-shot serve scores
+    val postings = TextAnalysis.bm25Postings(docs)
+    val inl = auditRow(TextAnalysis.bm25ServeAudit(postings,
+      TextAnalysis.Bm25PostingBound))
     assert(inl._6 == "inline_rank")
     assert((inl._1, inl._2, inl._3, inl._4, inl._5) ==
       (want.getLong(0), want.getLong(1), want.getLong(2),
         want.getLong(3), want.getLong(4)),
       s"inline audit $inl != q243 report $want")
     // stored-rank path over the annotated store: same split, tagged
-    val annotated = TextAnalysis.bm25AnnotatePostings(
-      TextAnalysis.bm25Postings(docs))
-    TextAnalysis.bm25TopKFromPostings(annotated)
-    val st = auditRow(TextAnalysis.lastServeAudit.get)
+    val annotated = TextAnalysis.bm25AnnotatePostings(postings)
+    val st = auditRow(TextAnalysis.bm25ServeAudit(annotated,
+      TextAnalysis.Bm25PostingBound))
     assert(st._6 == "stored_rank")
     assert((st._1, st._2, st._3, st._4, st._5) ==
       (inl._1, inl._2, inl._3, inl._4, inl._5),
@@ -1796,6 +1816,19 @@ class PipelineSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("compacted"), ex.getMessage)
     // a request WITHIN the old store's bound serves fine
     assert(TextAnalysis.bm25TopKFromPostings(oldStore, postingBound = 64)
+      .collect().nonEmpty)
+    // a legacy store written before the bound moved into the field
+    // metadata carries it only in the row-constant column: the guard
+    // must read that column, not assume the compile-time constant
+    val legacy = oldStore.withColumn("pbound", lit(64L).as("pbound"))
+    assert(!legacy.schema("pbound").metadata
+      .contains(TextAnalysis.PboundMetaKey))
+    val exLegacy = intercept[IllegalArgumentException] {
+      TextAnalysis.bm25TopKFromPostings(legacy,
+        postingBound = TextAnalysis.Bm25PostingBound)
+    }
+    assert(exLegacy.getMessage.contains("compacted"), exLegacy.getMessage)
+    assert(TextAnalysis.bm25TopKFromPostings(legacy, postingBound = 64)
       .collect().nonEmpty)
   }
 
