@@ -13,7 +13,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *    persist a scan they read several times, and without eviction a
   *    session sweeping several scale dirs would accumulate caches.
   *  - [[trained]]: a train-once-freeze artifact (IVF coarse cells, PQ
-  *    codebooks, BPE merges, a GraphX graph). An ANN index is trained per
+  *    codebooks, BPE merges, a GraphX graph, the BM25 serve model's
+  *    persisted idf and pruned postings). An ANN index is trained per
   *    corpus snapshot and then served; re-running the full Lloyd loop for
   *    every query batch is the unrealistic part (at 100 TB each training
   *    iteration is a corpus pass). Training is deterministic fixed-point,

@@ -1802,6 +1802,24 @@ class PipelineSpec extends AnyFunSuite {
     // to read the bound (the r19 per-serve first(pbound) aggregate):
     // guard dispatch happens at plan-build time, driver-side
     assert(TextAnalysis.bm25TopKFromPostings(reread).collect().nonEmpty)
+    // the guard runs before the model slot on EVERY call: after a valid
+    // serve has trained the model, an over-bound request still throws,
+    // and the held model survives it. The identity check is the sharp
+    // one: a retrain would re-persist the same plan, so a replaced
+    // frame's storage level alone cannot tell the two apart.
+    val heldKept = TextAnalysis.bm25ServeModel(reread,
+      TextAnalysis.Bm25PostingBound)._2
+    intercept[IllegalArgumentException] {
+      TextAnalysis.bm25TopKFromPostings(reread,
+        postingBound = TextAnalysis.Bm25PostingBound + 1)
+    }
+    assert(TextAnalysis.bm25TopKFromPostings(reread).collect().nonEmpty)
+    assert(heldKept.storageLevel !=
+      org.apache.spark.storage.StorageLevel.NONE,
+      "an over-bound request must not release the held model")
+    assert(TextAnalysis.bm25ServeModel(reread,
+      TextAnalysis.Bm25PostingBound)._2 eq heldKept,
+      "an over-bound request must not retrain the held model")
     // the guard validates against the bound the store was ACTUALLY
     // compacted with, not the compile-time constant: an old store
     // ranked only to 64 must refuse a 128-posting serve even though
@@ -3174,6 +3192,48 @@ class PipelineSpec extends AnyFunSuite {
     assert((rep.getLong(0), rep.getLong(1), rep.getLong(2),
         rep.getLong(3), rep.getLong(4)) == ((11L, 1L, 20L, 13L, 7L)),
       s"prune report must be exact: $rep")
+    // (e) the serve model (corpus stats, idf, the posting prune) is
+    // frozen per posting relation and bound: serves differing only in
+    // per-request parameters share one held model, a changed bound
+    // retrains, every serve is bit-exact against the first, and serving
+    // another relation releases the previous model
+    import org.apache.spark.storage.StorageLevel
+    val zp = TextAnalysis.bm25Postings(zipf)
+    def serve(pb: Int) = TextAnalysis.bm25TopKFromPostings(zp,
+      postingBound = pb).collect().toSeq
+    def narrowServe(pb: Int) = TextAnalysis.bm25TopKFromPostings(zp,
+      topK = 7, queryMod = 3L, termBound = 4, postingBound = pb)
+      .collect().toSeq
+    type Model =
+      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)
+    def model(pb: Int): Model = TextAnalysis.bm25ServeModel(zp, pb)
+    def same(a: Model, b: Model) = (a._1 eq b._1) && (a._2 eq b._2)
+    def released(m: Model) =
+      m._1.storageLevel == StorageLevel.NONE &&
+        m._2.storageLevel == StorageLevel.NONE
+    val first = serve(128)
+    val m128 = model(128)
+    assert(first.nonEmpty && m128._2.storageLevel != StorageLevel.NONE)
+    val narrowBatch = narrowServe(128)
+    assert(narrowBatch.nonEmpty && narrowBatch != first)
+    assert(same(model(128), m128),
+      "serves differing in queryMod/topK/termBound must share one model")
+    assert(serve(128) == first, "a warm serve must equal the first")
+    val at64 = serve(64)
+    val m64 = model(64)
+    // (idf does not depend on the bound: the retrained idf re-persists
+    // the released one's plan, so only the kept postings read NONE)
+    assert(!same(m64, m128) && m128._2.storageLevel == StorageLevel.NONE,
+      "a changed posting bound must retrain and release the old model")
+    assert(serve(128) == first && !same(model(128), m64) &&
+      m64._2.storageLevel == StorageLevel.NONE)
+    assert(narrowServe(128) == narrowBatch)
+    assert(serve(64) == at64)
+    val held = model(64)
+    assert(TextAnalysis.bm25TopKFromPostings(
+      TextAnalysis.bm25Postings(narrow)).collect().nonEmpty)
+    assert(released(held),
+      "serving another posting relation must release the previous model")
   }
 
   test("hybrid RRF (q230): matches the integer fusion replay; both rankers contribute") {

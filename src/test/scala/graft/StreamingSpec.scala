@@ -1469,27 +1469,55 @@ class StreamingSpec extends AnyFunSuite {
     }
     // the fast path's POINT, pinned in the plan: serving from the
     // compacted store carries only the two per-QUERY windows (the
-    // query-term rank and the final top-k) — the per-read dedup window
-    // and the two posting-prune windows are gone from the read path.
-    // Counted on the optimized LOGICAL plan; a logical tree repeats
-    // shared subtrees per reference, so the raw path's store-dedup +
-    // prune windows count ≥ once each on top of the two query windows.
+    // query-term rank and the final top-k). Counted on the optimized
+    // LOGICAL plan, where a persisted frame is one InMemoryRelation
+    // leaf: the serve model (idf + kept postings) is persisted per
+    // posting relation and bound, so the raw path's two posting-prune
+    // windows leave the per-request plan too and now live inside the
+    // model's cached physical plan, read through the InMemoryRelation.
     def windowCount(df: org.apache.spark.sql.DataFrame): Int =
       df.queryExecution.optimizedPlan.collect {
         case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
       }.length
-    val fastW = windowCount(
-      TextAnalysis.bm25TopKFromPostings(compact))
-    val rawW = windowCount(TextAnalysis.bm25TopKFromPostings(
-      StreamingIndex.lexIndexTable(spark, storeDir)))
+    def relations(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.withCachedData.collect {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+      }
+    val aqe =
+      new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    // the WindowExecs the held model's cached plans carry — and the
+    // serve must read that very model (shared cache builder)
+    def modelWindows(postings: org.apache.spark.sql.DataFrame,
+        served: org.apache.spark.sql.DataFrame): Int = {
+      val (idf, kept) = TextAnalysis.bm25ServeModel(postings,
+        TextAnalysis.Bm25PostingBound)
+      val model = Seq(idf, kept).flatMap(relations)
+      val read = relations(served).map(_.cacheBuilder)
+      assert(model.size == 2 &&
+        model.forall(m => read.exists(_ eq m.cacheBuilder)),
+        "the serve must read the held model")
+      model.map(m => aqe.collect(m.cacheBuilder.cachedPlan) {
+        case w: org.apache.spark.sql.execution.window.WindowExec => w
+      }.length).sum
+    }
+    val fastServe = TextAnalysis.bm25TopKFromPostings(compact)
+    val fastW = windowCount(fastServe)
     assert(fastW == 2,
       s"fast path must carry ONLY the two per-query windows: $fastW")
-    // (the store-dedup window hides inside the persisted-scan cache
-    // node once materialized, so the visible raw overhead is the two
-    // PRUNE windows — the ranking work the compaction moved off the
-    // read path)
-    assert(rawW >= fastW + 2,
-      s"raw path must still pay the per-term prune windows: $rawW")
+    val fastModelW = modelWindows(compact, fastServe)
+    assert(fastModelW == 0,
+      s"compacted store's model must filter the stored rank: $fastModelW")
+    val raw = StreamingIndex.lexIndexTable(spark, storeDir)
+    val rawServe = TextAnalysis.bm25TopKFromPostings(raw)
+    val rawW = windowCount(rawServe)
+    assert(rawW == 2,
+      s"raw-store serve must carry ONLY the two per-query windows: $rawW")
+    // the raw path still pays the per-term prune windows — once, in
+    // building its model: the ranking work compaction moves off the
+    // read path
+    val rawModelW = modelWindows(raw, rawServe)
+    assert(rawModelW >= 2,
+      s"raw store's model must hold the per-term prune windows: $rawModelW")
   }
 
   test("compaction commit marker: a partial rewrite is invisible; serves fall back to the uncompacted path") {
