@@ -2468,11 +2468,11 @@ object SparkEntry {
       |pkept AS (
       |  SELECT t, cid, impact FROM (
       |    SELECT c.t, c.cid,
-      |      CAST(floor(i.idf_q * ((c.tf * 2.2)
+      |      CAST(floor(i.idf_q * ((c.tf * CAST(2.2 AS DOUBLE))
       |        / (c.tf + 1.2 * (0.25 + 0.75 * c.len / s.avgdl))))
       |        AS BIGINT) AS impact,
       |      row_number() OVER (PARTITION BY c.t
-      |        ORDER BY CAST(floor(i.idf_q * ((c.tf * 2.2)
+      |        ORDER BY CAST(floor(i.idf_q * ((c.tf * CAST(2.2 AS DOUBLE))
       |          / (c.tf + 1.2 * (0.25 + 0.75 * c.len / s.avgdl))))
       |          AS BIGINT) DESC, c.cid) AS prk
       |    FROM ccb c JOIN idf i USING (t) CROSS JOIN bstats s)

@@ -247,19 +247,9 @@ object Dedup {
     * (q166 savings rollup, q195 leakage-safe split) — those add their
     * own shuffle/order, so the core stays sort-free. */
   private[graft] def keepListFrom(spark: SparkSession, docs: DataFrame,
-      maxBucket: Int = 1000): DataFrame = {
-    import spark.implicits._
-    val comp = org.apache.spark.graphx.Graph
-      .fromEdgeTuples(dupPairsFrom(docs, maxBucket).as[(Long, Long)].rdd,
-        defaultValue = 0)
-      .connectedComponents().vertices
-      .map { case (id, c) => (id, c) }
-      .toDF("doc_id", "comp")
-    docs.select(col("doc_id"))
-      .join(comp, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("comp"), col("doc_id")).as("canonical_id"))
-  }
+      maxBucket: Int = 1000): DataFrame =
+    GraphOps.canonicalIds(docs.select(col("doc_id")),
+      dupPairsFrom(docs, maxBucket))
 
   /** The verified near-dup PAIR relation (agree ≥ 32 funnel pairs ∪
     * the escalated exact pairs inside over-cap buckets) — the graph the

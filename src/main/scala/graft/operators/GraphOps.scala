@@ -1,7 +1,9 @@
 package graft.operators
 
 import graft.Tables
+import org.apache.spark.HashPartitioner
 import org.apache.spark.graphx.{Edge, Graph, PartitionStrategy, VertexId}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -27,6 +29,15 @@ import org.apache.spark.storage.StorageLevel
   * with `PartitionStrategy.EdgePartition2D` (done below) so each superstep's
   * message exchange is bounded by sqrt(P) replication, and checkpoint the
   * graph every ~10 supersteps to cut lineage.
+  *
+  * Every GraphX graph is built by [[graphOf]]; the remaining GraphX uses:
+  *  - q32/q35: the cached [[toGraph]] graph is smile's load-once,
+  *    traverse-many CSR, reused by every traversal over the same edges;
+  *  - q33: the Pregel [[pregelCosts]] is the reference the DataFrame
+  *    sweep specs (q37, q124-q126) compare against;
+  *  - q39: GraphX's strongly-connected-components library routine.
+  * Components for the dedup keep-lists (q129/q133/q136) go through
+  * [[canonicalIds]].
   */
 object GraphOps {
 
@@ -90,20 +101,23 @@ object GraphOps {
   private[graft] def edgeWeightJvm(s: Long, d: Long): Long =
     ((s % 7L) * 3L + d % 7L) % 7L + 1L
 
-  /** Edge RDD placed by [[PartitionStrategy.EdgePartition2D]] BEFORE the
-    * graph is built — same placement as `graph.partitionBy`, but the
-    * vertex routing tables are constructed once against the final edge
-    * layout instead of being invalidated by a post-construction edge
-    * shuffle (the "Joining two VertexPartitions with different indexes
-    * is slow" rebuild on every Pregel superstep). */
-  private def prePartitioned[E: scala.reflect.ClassTag](
-      edgeRdd: org.apache.spark.rdd.RDD[Edge[E]],
-      parts: Int): org.apache.spark.rdd.RDD[Edge[E]] = {
+  /** The one GraphX graph build: edges placed by
+    * [[PartitionStrategy.EdgePartition2D]] at the RDD's own partition
+    * count BEFORE the graph is built — same placement as
+    * `graph.partitionBy`, but the vertex routing tables are constructed
+    * once against the final edge layout instead of being invalidated by a
+    * post-construction edge shuffle (the "Joining two VertexPartitions
+    * with different indexes is slow" rebuild on every Pregel superstep). */
+  private def graphOf(edges: RDD[Edge[Long]]): Graph[Long, Long] = {
+    val parts = edges.getNumPartitions
     val strat = PartitionStrategy.EdgePartition2D
-    edgeRdd
+    val placed = edges
       .map(e => (strat.getPartition(e.srcId, e.dstId, parts), e))
-      .partitionBy(new org.apache.spark.HashPartitioner(parts))
+      .partitionBy(new HashPartitioner(parts))
       .map(_._2)
+    Graph.fromEdges(placed, defaultValue = 0L,
+      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
+      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
   }
 
   /** GraphX graph per edge relation, held in a trained slot — the Spark
@@ -128,21 +142,45 @@ object GraphOps {
       val parts = math.max(1L, math.min(
         spark(edges).sparkContext.defaultParallelism.toLong * 4,
         n / 1000000L + 1)).toInt
-      val edgeRdd = edges.select(col("src"), col("dst")).rdd
+      graphOf(edges.select(col("src"), col("dst")).rdd
         .map(r => Edge(r.getLong(0), r.getLong(1), 1L))
-        .coalesce(parts)
-      // Pre-partition the edges with the SAME 2D strategy instead of
-      // graph.partitionBy: partitionBy re-shuffles edges AFTER the
-      // graph exists, so the vertex routing tables are rebuilt against
-      // mismatched indexes on first use — every Pregel superstep then
-      // pays the "Joining two VertexPartitions with different indexes
-      // is slow" full-rebuild path. Identical placement (the strategy
-      // maps each edge to the same partition id), routing built once.
-      Graph.fromEdges(
-          prePartitioned(edgeRdd, parts), defaultValue = 0L,
-          edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-          vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
+        .coalesce(parts))
     }
+
+  /** Hop-capped min-plus Pregel from `source`: after k supersteps a
+    * vertex holds the exact min edge-attribute sum over ≤ k-hop paths
+    * (bounded Bellman-Ford; hop distance when every attribute is 1).
+    * Unreached vertices are dropped. */
+  private def pregelCosts(g: Graph[Long, Long], source: Long,
+      maxHops: Int): RDD[(VertexId, Long)] =
+    g.mapVertices((id, _) => if (id == source) 0L else Long.MaxValue)
+      .pregel(Long.MaxValue, maxIterations = maxHops)(
+        (_, cost, msg) => math.min(cost, msg),
+        t => if (t.srcAttr != Long.MaxValue && t.srcAttr + t.attr < t.dstAttr)
+               Iterator((t.dstId, t.srcAttr + t.attr))
+             else Iterator.empty,
+        (a, b) => math.min(a, b))
+      .vertices.filter(_._2 != Long.MaxValue)
+
+  /** Connected components as (id, comp), comp = the smallest vertex id in
+    * the component (GraphX label propagation, run to convergence). */
+  private def componentsOf(g: Graph[Long, Long]): RDD[(VertexId, VertexId)] =
+    g.connectedComponents().vertices
+
+  /** Canonical id per row of the one-column frame `ids`: the minimum of
+    * its connected component in the (ia, ib) pair graph, or the id itself
+    * when it appears in no pair — the dedup keep-list contract
+    * (q129/q133/q136). Output columns: the id column, `canonical_id`. */
+  private[graft] def canonicalIds(ids: DataFrame,
+      pairs: DataFrame): DataFrame = {
+    val spark = ids.sparkSession
+    import spark.implicits._
+    val id = ids.columns.head
+    val edges = pairs.select(col("ia"), col("ib")).as[(Long, Long)].rdd
+      .map { case (a, b) => Edge(a, b, 1L) }
+    ids.join(componentsOf(graphOf(edges)).toDF(id, "_comp"), Seq(id), "left")
+      .select(col(id), coalesce(col("_comp"), col(id)).as("canonical_id"))
+  }
 
   private def spark(df: DataFrame) = df.sparkSession
 
@@ -217,55 +255,21 @@ object GraphOps {
   def bfs(spark: SparkSession, dir: String, source: Long = 1L,
       maxHops: Int = 10): DataFrame = {
     import spark.implicits._
-    val g = toGraph(symmetrizedEdges(Tables(spark, dir)))
-    val init = g.mapVertices((id, _) => if (id == source) 0L else Long.MaxValue)
-    val res = init.pregel(Long.MaxValue, maxIterations = maxHops)(
-      (_, dist, msg) => math.min(dist, msg),
-      t => if (t.srcAttr != Long.MaxValue && t.srcAttr + 1L < t.dstAttr)
-             Iterator((t.dstId, t.srcAttr + 1L))
-           else Iterator.empty,
-      (a, b) => math.min(a, b))
-    res.vertices.filter(_._2 != Long.MaxValue)
-      .map { case (id, d) => (id, d) }
+    pregelCosts(toGraph(symmetrizedEdges(Tables(spark, dir))), source, maxHops)
       .toDF("node", "dist")
       .orderBy(col("node"))
   }
 
-  /** BFS via iterative DataFrame frontier joins — the DataFrame-only
-    * fallback SURVEY §7 names for when GraphX RDD conversion costs
-    * dominate. Each hop: frontier ⋈ edges → anti-join against settled
-    * nodes → new frontier; early exit on empty frontier. Same semantics
-    * (and oracle) as the Pregel version. At cluster scale each hop is one
-    * shuffle on the join key; `persist` + count materializes per hop and a
-    * real deployment checkpoints every ~10 hops to cut lineage. */
+  /** BFS as a one-source call of the unweighted DataFrame sweep behind
+    * [[multiSourceBfs]] — the DataFrame-only path SURVEY §7 names for
+    * when GraphX RDD conversion costs dominate. Same semantics (and
+    * oracle) as the Pregel [[bfs]]; an isolated source yields {source → 0}. */
   def bfsFrontier(spark: SparkSession, dir: String, source: Long = 1L,
-      maxHops: Int = 10): DataFrame = {
-    import spark.implicits._
-    val edges = undirectedEdges(Tables(spark, dir)).persist()
-    var settled = Seq((source, 0L)).toDF("node", "dist").persist()
-    var frontier = settled
-    var hop = 1L
-    var done = false
-    while (hop <= maxHops && !done) {
-      // localCheckpoint truncates lineage each hop — without it the plan
-      // tree (and Catalyst planning time) grows exponentially with hops;
-      // a cluster deployment uses reliable checkpoint instead
-      val next = frontier.select(col("node")).alias("f")
-        .join(edges.alias("e"), col("f.node") === col("e.src"))
-        .select(col("e.dst").as("node")).distinct()
-        .join(settled, Seq("node"), "left_anti")
-        .withColumn("dist", lit(hop))
-        .localCheckpoint(true)
-      if (next.isEmpty) done = true
-      else {
-        settled = settled.union(next).localCheckpoint(true)
-        frontier = next
-        hop += 1
-      }
-    }
-    edges.unpersist()
-    settled.orderBy(col("node"))
-  }
+      maxHops: Int = 10): DataFrame =
+    multiSourceCostsFrom(spark, hopEdges(Tables(spark, dir)), Seq(source),
+        maxHops)
+      .select(col("node"), col("cost").as("dist"))
+      .orderBy(col("node"))
 
   /** Weighted SSSP (the reference README's stated "routing" purpose,
     * `README.md:4`, never implemented there). Edge weight is the
@@ -275,26 +279,12 @@ object GraphOps {
   def sssp(spark: SparkSession, dir: String, source: Long = 1L,
       maxHops: Int = 8): DataFrame = {
     import spark.implicits._
-    val ue = symmetrizedEdges(Tables(spark, dir))
-    val edgeRdd = ue.select(col("src"), col("dst")).rdd.map { r =>
-      val (s, d) = (r.getLong(0), r.getLong(1))
-      Edge(s, d, edgeWeightJvm(s, d))
-    }
-    // pre-partitioned for the same reason as toGraph: partitionBy after
-    // construction leaves stale vertex routing (different-index joins)
-    val g = Graph.fromEdges(
-        prePartitioned(edgeRdd, edgeRdd.getNumPartitions), 0L,
-        edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-        vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
-    val init = g.mapVertices((id, _) => if (id == source) 0L else Long.MaxValue)
-    val res = init.pregel(Long.MaxValue, maxIterations = maxHops)(
-      (_, dist, msg) => math.min(dist, msg),
-      t => if (t.srcAttr != Long.MaxValue && t.srcAttr + t.attr < t.dstAttr)
-             Iterator((t.dstId, t.srcAttr + t.attr))
-           else Iterator.empty,
-      (a, b) => math.min(a, b))
-    res.vertices.filter(_._2 != Long.MaxValue)
-      .map { case (id, d) => (id, d) }
+    val edges = symmetrizedEdges(Tables(spark, dir))
+      .select(col("src"), col("dst")).rdd.map { r =>
+        val (s, d) = (r.getLong(0), r.getLong(1))
+        Edge(s, d, edgeWeightJvm(s, d))
+      }
+    pregelCosts(graphOf(edges), source, maxHops)
       .toDF("node", "cost")
       .orderBy(col("node"))
   }
@@ -520,7 +510,9 @@ object GraphOps {
         val next = state.union(relaxed)
           .groupBy(col("origin"), col("node"))
           .agg(min(col("cost")).as("cost"))
-        // lineage cut per superstep (see bfsFrontier's scale note)
+        // localCheckpoint cuts lineage per superstep — without it the
+        // plan tree (and Catalyst planning time) grows with every hop; a
+        // cluster deployment uses reliable checkpoint instead
         state =
           if (durableEvery > 0 && (hop + 1) % durableEvery == 0)
             next.checkpoint(true)
@@ -559,12 +551,15 @@ object GraphOps {
     val m = maxCust(t) // maxCust rejects empty fixtures with a clear error
     require(m > 0, s"nonpositive max c_custkey $m at $dir: source rule needs m > 0")
     val sources = (0 until k).map(i => 1L + (i.toLong * 37L) % m).distinct
-    val unweighted = symmetrizedEdges(t)
-      .select(col("src"), col("dst"), lit(1L).as("w"))
-    multiSourceCostsFrom(spark, unweighted, sources, maxHops)
+    multiSourceCostsFrom(spark, hopEdges(t), sources, maxHops)
       .select(col("origin"), col("node"), col("cost").as("dist"))
       .orderBy(col("origin"), col("node"))
   }
+
+  /** Symmetrized edges at weight 1 — the unweighted sweep's relation,
+    * under which min cost is min hop count. */
+  private def hopEdges(t: Tables): DataFrame =
+    symmetrizedEdges(t).select(col("src"), col("dst"), lit(1L).as("w"))
 
   /** Landmark distance index + triangle-inequality bounds — the routing
     * INDEX the reference schema declares but never builds
@@ -1023,9 +1018,7 @@ object GraphOps {
     * oracle recomputes exactly that). */
   def connectedComponents(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val g = toGraph(symmetrizedEdges(Tables(spark, dir)))
-    g.connectedComponents().vertices
-      .map { case (id, comp) => (id, comp) }
+    componentsOf(toGraph(symmetrizedEdges(Tables(spark, dir))))
       .toDF("node", "component")
       .orderBy(col("node"))
   }

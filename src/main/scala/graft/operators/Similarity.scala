@@ -427,11 +427,26 @@ object Similarity {
   /** Same, over an arbitrary (vec_id, embedding) frame. */
   def semanticKeepListFrom(vecs: DataFrame, tau: Double, k: Int = 16,
       maxCell: Int = 1000): DataFrame = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val cents = centroidDirs(vecs, k)
     val asg = GraftCache.persisted("Similarity.cell",
-      assignCellsFlatAuto(vecs, cents))
+      assignCellsFlatAuto(vecs, centroidDirs(vecs, k)))
+    val (pairs, _) = cellDupPairs(asg, tau, maxCell)
+    GraphOps.canonicalIds(asg.select(col("vec_id")), pairs)
+      .orderBy(col("vec_id"))
+  }
+
+  /** The dup-pair evidence of a cell assignment, as (ia, ib) with ia the
+    * lower id, next to the hot cells (over `maxCell` rows): within-cell
+    * τ-pairs from the pairwise compare of the cells in play, plus the
+    * escalation rung's pairs inside hot cells — exact-embedding dedup,
+    * ia = the lowest id of each identical group — linear and
+    * evidence-backed (identical ⇒ cosine 1 ≥ tau), so an all-identical
+    * hot cell of any size collapses to one representative instead of
+    * being kept whole. As in BucketGuard, an empty hot list (the healthy
+    * case) skips the escalation stages at plan level — `asg` is
+    * persisted, so the probe is a scan of cached cell counts, and the
+    * result is unchanged (empty hot ⇒ empty escalation set). */
+  private def cellDupPairs(asg: DataFrame, tau: Double,
+      maxCell: Int): (DataFrame, DataFrame) = {
     val hot = asg.groupBy(col("cell")).agg(count(lit(1)).as("_csz"))
       .filter(col("_csz") > maxCell)
     val hotCells = hot.select(col("cell"))
@@ -446,7 +461,7 @@ object Similarity {
       .select(col("ia"), col("ib"))
     val escPairs =
       if (hot.isEmpty)
-        spark.range(0).select(col("id").as("ia"), col("id").as("ib"))
+        asg.sparkSession.range(0).select(col("id").as("ia"), col("id").as("ib"))
       else {
         val hotRows = asg.join(hotCells, Seq("cell"), "left_semi")
         val escCanon = hotRows.groupBy(col("cell"), col("embedding"))
@@ -455,17 +470,7 @@ object Similarity {
           .filter(col("vec_id") =!= col("_canon"))
           .select(col("_canon").as("ia"), col("vec_id").as("ib"))
       }
-    val comp = org.apache.spark.graphx.Graph
-      .fromEdgeTuples(pairs.unionByName(escPairs).as[(Long, Long)].rdd,
-        defaultValue = 0)
-      .connectedComponents().vertices
-      .map { case (id, c) => (id, c) }
-      .toDF("vec_id", "comp")
-    asg.select(col("vec_id"))
-      .join(comp, Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        coalesce(col("comp"), col("vec_id")).as("canonical_id"))
-      .orderBy(col("vec_id"))
+    (pairs.unionByName(escPairs), hotCells)
   }
 
   /** Same, over an arbitrary (vec_id, embedding) frame — lets tests plant
@@ -494,38 +499,8 @@ object Similarity {
       if (!twoLevel) df => assignCellsFlatAuto(df, cents)
       else df => withTwoLevelCell(df, cents)
     val asg = GraftCache.persisted("Similarity.cell", cellExpr(vecs))
-    val hot = asg.groupBy(col("cell")).agg(count(lit(1)).as("_csz"))
-      .filter(col("_csz") > maxCell)
-    val hotCells = hot.select(col("cell"))
-    val inPlay = asg.join(hotCells, Seq("cell"), "left_anti")
-    val a = inPlay.select(col("cell"), col("vec_id").as("ia"),
-      col("embedding").as("ea"), col("nrm").as("na"))
-    val b = inPlay.select(col("cell"), col("vec_id").as("ib"),
-      col("embedding").as("eb"), col("nrm").as("nb"))
-    val dropped = a.join(b, Seq("cell"))
-      .filter(col("ia") < col("ib"))
-      .filter(dot(col("ea"), col("eb")) / (col("na") * col("nb")) >= tau)
-      .select(col("ib").as("vec_id"))
-    // escalation rung: inside hot cells, exact-embedding dedup (keep the
-    // lowest id of each identical group) — linear, evidence-backed
-    // (identical ⇒ cosine 1 ≥ tau); an all-identical hot cell of any
-    // size collapses to one representative instead of being kept whole.
-    // As in BucketGuard, an empty hot list (the healthy case) skips the
-    // escalation stages at plan level — `asg` is persisted, so the probe
-    // is a scan of cached cell counts, and the result is unchanged
-    // (empty hot ⇒ empty escalation set by construction).
-    val escDropped =
-      if (hot.isEmpty)
-        vecs.sparkSession.range(0).select(col("id").as("vec_id"))
-      else {
-        val hotRows = asg.join(hotCells, Seq("cell"), "left_semi")
-        val escCanon = hotRows.groupBy(col("cell"), col("embedding"))
-          .agg(min(col("vec_id")).as("_canon"))
-        hotRows.join(escCanon, Seq("cell", "embedding"))
-          .filter(col("vec_id") =!= col("_canon"))
-          .select(col("vec_id"))
-      }
-    val allDropped = dropped.unionByName(escDropped)
+    val (pairs, hotCells) = cellDupPairs(asg, tau, maxCell)
+    val allDropped = pairs.select(col("ib").as("vec_id"))
       .distinct().withColumn("_drop", lit(true))
     asg.select(col("vec_id"), col("cell").cast("long").as("cell"))
       .join(allDropped, Seq("vec_id"), "left")

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Tables
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, GraphOps, Similarity}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -289,12 +289,11 @@ object StreamingDedup {
     * one-shot over everything the stream has seen: pairs whose every
     * generating bucket finally went hot are filtered out, the exact-md5
     * compaction rung dedups identical docs inside finally-hot buckets,
-    * GraphX connected components run over the surviving dup PAIRS only
-    * (tiny by construction), canonical = component minimum, every seen
-    * doc present. */
+    * connected components ([[GraphOps.canonicalIds]]) run over the
+    * surviving dup PAIRS only (tiny by construction), canonical =
+    * component minimum, every seen doc present. */
   def keepList(spark: SparkSession, storeDir: String,
       maxBucket: Int = 1000): DataFrame = {
-    import spark.implicits._
     val ids = readAll(spark, s"$storeDir/ids",
       spark.range(0).select(col("id").as("doc_id"),
         lit(null).cast("string").as("md5")))
@@ -334,16 +333,8 @@ object StreamingDedup {
           .select(col("ia"), col("doc_id").as("ib"))
           .distinct()
       }
-    val comp = org.apache.spark.graphx.Graph
-      .fromEdgeTuples(surviving.unionByName(escPairs).as[(Long, Long)].rdd,
-        defaultValue = 0)
-      .connectedComponents().vertices
-      .map { case (id, c) => (id, c) }
-      .toDF("doc_id", "comp")
-    ids.select(col("doc_id"))
-      .join(comp, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("comp"), col("doc_id")).as("canonical_id"))
+    GraphOps.canonicalIds(ids.select(col("doc_id")),
+        surviving.unionByName(escPairs))
       .orderBy(col("doc_id"))
   }
 

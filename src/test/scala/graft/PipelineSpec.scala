@@ -1177,14 +1177,24 @@ class PipelineSpec extends AnyFunSuite {
     // instead of depending on the fixture never producing one.
     val edgeNodes = GraphOps.undirectedEdges(Tables(spark, sf))
       .select(col("src")).distinct().collect().map(_.getLong(0)).toSet
+    // q37's DataFrame sweep (bfsFrontier) is held to the same reference:
+    // the Pregel bfs when s has edges, the seed row alone when isolated
     expectSrcs.take(3).foreach { s =>
+      val frontier = GraphOps.bfsFrontier(spark, sf, source = s).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
       if (edgeNodes.contains(s)) {
         val single = GraphOps.bfs(spark, sf, source = s).collect()
           .map(r => r.getLong(0) -> r.getLong(1)).toMap
         assert(batched(s) == single,
           s"origin $s: batched slice diverges from single-source BFS")
-      } else assert(batched(s) == Map(s -> 0L),
-        s"isolated origin $s: expected only the seed row")
+        assert(frontier == single,
+          s"origin $s: bfsFrontier diverges from single-source BFS")
+      } else {
+        assert(batched(s) == Map(s -> 0L),
+          s"isolated origin $s: expected only the seed row")
+        assert(frontier == Map(s -> 0L),
+          s"isolated origin $s: bfsFrontier expected only the seed row")
+      }
     }
   }
 
@@ -1366,6 +1376,27 @@ class PipelineSpec extends AnyFunSuite {
       if (!r.isNullAt(3))
         assert(r.getLong(3) >= r.getLong(2),
           s"${r.getLong(0)}->${r.getLong(1)}: upper ${r.getLong(3)} < exact ${r.getLong(2)}")
+    }
+  }
+
+  test("graph builds, Pregel and connected components live once, in GraphOps") {
+    // every GraphX graph is built by GraphOps.graphOf, every Pregel
+    // traversal runs GraphOps.pregelCosts and every components call goes
+    // through GraphOps.componentsOf — no operator rebuilds its own copy
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(
+        java.nio.file.Paths.get("src/main/scala/graft")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    def sites(token: String) = for {
+      f <- files
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains(token)
+    } yield s"${f.getFileName}:${i + 1}"
+    assert(sites("fromEdgeTuples").isEmpty, sites("fromEdgeTuples").mkString("\n"))
+    Seq("connectedComponents()", "Graph.fromEdges(", ".pregel(").foreach { t =>
+      val at = sites(t)
+      assert(at.size == 1 && at.head.startsWith("GraphOps.scala:"),
+        s"$t expected once, in GraphOps: ${at.mkString(", ")}")
     }
   }
 

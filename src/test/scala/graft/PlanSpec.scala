@@ -13,6 +13,16 @@ class PlanSpec extends AnyFunSuite {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
+  /** Every registered query planned once, shared by the inventory-wide
+    * tests; None when constructing or planning the query throws. */
+  private lazy val inventory
+      : Map[String, Option[org.apache.spark.sql.execution.SparkPlan]] =
+    SparkEntry.queries.keys.map { name =>
+      name -> (try Some(
+        SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan)
+      catch { case _: Throwable => None })
+    }.toMap
+
   test("q02: filter is pushed into the parquet scan, single column read") {
     val p = plan("q02_scan_filter_count")
     assert(p.contains("PushedFilters: [IsNotNull(l_quantity), GreaterThan(l_quantity,30.0)]"), p)
@@ -83,7 +93,7 @@ class PlanSpec extends AnyFunSuite {
     val allowed = Set("q45_cosine_topk_pairs", "q46_ann_bruteforce_topk",
       "q47_ann_lsh_topk")
     SparkEntry.queries.keys.filterNot(allowed).foreach { name =>
-      val p = try plan(name) catch { case _: Throwable => "" }
+      val p = inventory(name).map(_.toString).getOrElse("")
       assert(!p.contains("CartesianProduct"), s"$name has a cartesian product:\n$p")
     }
   }
@@ -189,10 +199,7 @@ class PlanSpec extends AnyFunSuite {
     // distributed (Windows.windowRanking); nothing may reintroduce one.
     import org.apache.spark.sql.execution.window.WindowExec
     SparkEntry.queries.keys.foreach { name =>
-      val exec = try {
-        SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan
-      } catch { case _: Throwable => null }
-      if (exec != null) {
+      inventory(name).foreach { exec =>
         val bad = exec.collectWithSubqueries {
           case w: WindowExec if w.partitionSpec.isEmpty => w
         }
