@@ -205,7 +205,8 @@ object CorpusOps {
     * per-(lang, source) mixture report. One declarative plan: the
     * contamination anti-join probes a broadcast benchmark gram set, the
     * repetition signals are per-row folds, and the only shuffles are the
-    * dedup's digest group-by and the final mixture rollup. */
+    * dedup's digest group-by and the final mixture rollup (the
+    * contaminated ids feed the anti-join as probed, with no distinct). */
   def fullPipeline(spark: SparkSession, dir: String): DataFrame =
     cleaningPipeline(Tables(spark, dir).documents, lmGate = false)
 
@@ -218,8 +219,11 @@ object CorpusOps {
     val keep = docs.groupBy(md5(col("text")))
       .agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"))
+    // no distinct on either side of the decontamination: a semi-join
+    // probe and an anti-join answer the same for duplicate keys, and
+    // each distinct is a shuffle (and a job) the answer does not need
     val bench = TextAnalysis.docGrams(docs.filter(col("doc_id") % 5 === 0))
-      .select(col("g")).distinct()
+      .select(col("g"))
     // NOT cached deliberately: the corpus relation carries full text
     // blobs, and materializing them costs more than re-deriving the
     // cheap md5-keep join from the (column-pruned) scan — measured
@@ -238,8 +242,8 @@ object CorpusOps {
     // corpus size and the doc_id filter still pushes down.
     val contaminated = TextAnalysis.docGrams(
         docs.filter(col("doc_id") % 5 =!= 0))
-      .join(broadcast(bench), Seq("g"))
-      .select(col("doc_id")).distinct()
+      .join(broadcast(bench), Seq("g"), "left_semi")
+      .select(col("doc_id"))
     val decontaminated = corpus.join(contaminated, Seq("doc_id"), "left_anti")
     val gated =
       if (!lmGate) decontaminated
@@ -807,12 +811,15 @@ object CorpusOps {
     * (dsir_q DESC, doc_id): top-k selection rather than Gumbel noise,
     * the same derandomization as q191's priority sample.
     *
-    * Scale shape: one token explode feeding B-bounded histograms (B rows
-    * shuffle, then BROADCAST — the model is kilobytes no matter how big
-    * the corpus is), per-doc (doc_id, bucket) partial-aggregated counts,
-    * one doc-keyed sum, and a global top-k that plans as
+    * Scale shape: one B-row histogram (target and raw count per bucket,
+    * one bucket-keyed aggregate) is collected to the driver — T and R are
+    * its column sums, and the model is kilobytes no matter how big the
+    * corpus is; it comes back as a broadcast per-bucket score. The raw
+    * tokens then take one doc-keyed sum of their bucket's score (the sum
+    * of n·score_q over (doc, bucket) groups equals the per-token sum,
+    * exactly in longs), and a global top-k plans as
     * TakeOrderedAndProject (bounded per-partition heaps, no global
-    * sort). Nothing quadratic, nothing driver-side. */
+    * sort). Nothing quadratic, nothing persisted. */
   def dsirImportance(spark: SparkSession, dir: String): DataFrame =
     dsirImportanceFrom(Tables(spark, dir).documents)
 
@@ -820,31 +827,30 @@ object CorpusOps {
   private[graft] def dsirImportanceFrom(docs: DataFrame,
       buckets: Int = DsirBuckets, k: Int = 64): DataFrame = {
     import graft.functions.PolyHash.poly_hash
-    val toks = GraftCache.persisted("CorpusOps.dsir", docs
+    import docs.sparkSession.implicits._
+    val toks = docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       .select(col("doc_id"),
-        pmod(poly_hash(col("term"), lit(0L)), lit(buckets.toLong)).as("b")))
-    val tgt = toks.filter(col("doc_id") % 5 === 0)
-    val raw = toks.filter(col("doc_id") % 5 =!= 0)
-    val ct = tgt.groupBy(col("b")).agg(count(lit(1)).as("ct"))
-    val tTot = tgt.agg(count(lit(1)).as("t"))
-    val rc = raw.groupBy(col("b")).agg(count(lit(1)).as("cr"))
-    val rTot = raw.agg(count(lit(1)).as("r"))
-    // per-bucket quantized log-likelihood ratio — only buckets the raw
-    // corpus touches need a score (missing target counts coalesce to 0)
-    val scores = rc.join(ct, Seq("b"), "left")
-      .crossJoin(broadcast(tTot)).crossJoin(broadcast(rTot))
-      .withColumn("score_q", floor(log(
-        ((coalesce(col("ct"), lit(0L)) + 1).cast("double")
-          / (col("t") + buckets).cast("double"))
+        pmod(poly_hash(col("term"), lit(0L)), lit(buckets.toLong)).as("b"))
+    val raw = col("doc_id") % 5 =!= 0
+    val hist = toks.groupBy(col("b"))
+      .agg(count(when(col("doc_id") % 5 === 0, 1)).as("ct"),
+        count(when(raw, 1)).as("cr"))
+      .as[(Long, Long, Long)].collect().toSeq
+    val (tTot, rTot) = (hist.map(_._2).sum, hist.map(_._3).sum)
+    // per-bucket quantized log-likelihood ratio, the same Spark
+    // expression over the collected histogram
+    val scores = hist.toDF("b", "ct", "cr")
+      .select(col("b"), floor(log(
+        ((col("ct") + 1).cast("double")
+          / lit(tTot + buckets).cast("double"))
           / ((col("cr") + 1).cast("double")
-            / (col("r") + buckets).cast("double"))) * lit(1e4)))
-      .select(col("b"), col("score_q"))
-    raw.groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("n"))
+            / lit(rTot + buckets).cast("double"))) * lit(1e4))
+        .as("score_q"))
+    toks.filter(raw)
       .join(broadcast(scores), Seq("b"))
       .groupBy(col("doc_id"))
-      .agg(sum(col("n")).as("n_tokens"),
-        sum(col("n") * col("score_q")).as("dsir_q"))
+      .agg(count(lit(1)).as("n_tokens"), sum(col("score_q")).as("dsir_q"))
       .orderBy(col("dsir_q").desc, col("doc_id"))
       .limit(k)
       .select(col("doc_id"), col("n_tokens"), col("dsir_q"))

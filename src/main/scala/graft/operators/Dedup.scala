@@ -454,11 +454,11 @@ object Dedup {
     * Scale shape: the explosion is ~L/segWords rows per document; the
     * frequency tier shuffles (md5 digest, doc_id) pairs — 16-byte keys,
     * not segment text — into a two-level distinct-count aggregate; the
-    * removal is a left_anti join on the digest (same key, same
-    * partitioning); reassembly is one groupBy(doc_id) whose per-group
-    * state is bounded by document length. No self-join anywhere — the
-    * whole funnel is two key-shuffles plus the reassembly, linear in
-    * corpus size. */
+    * hot digests mark dropped positions through a digest-keyed
+    * left_semi join, each document's dropped indices group into one
+    * array row, and one doc-keyed join rebuilds the text locally from
+    * the scan. No self-join anywhere — the whole funnel is two
+    * key-shuffles plus the reassembly, linear in corpus size. */
   def repeatedSegmentRemoval(spark: SparkSession, dir: String): DataFrame =
     repeatedSegmentRemovalFrom(Tables(spark, dir).documents)
 
@@ -467,12 +467,11 @@ object Dedup {
     * unique segments survive verbatim. */
   def repeatedSegmentRemovalFrom(docs: DataFrame, segWords: Int = 10,
       minDocs: Int = 2): DataFrame = {
-    val p = docs.sparkSession.sparkContext.defaultParallelism
-    // hash-by-doc_id, not round-robin: same input spread (doc_id is
-    // unique), no sort-before-repartition, and the final per-doc
-    // assembly join can reuse this partitioning instead of paying a
-    // second text-mass exchange
-    val words = docs.repartition(p, col("doc_id"))
+    // No repartition of the text: the final per-doc join's `dropped`
+    // side holds drop indices only and broadcasts at shard scale; past
+    // broadcast scale the join plans sort-merge and shuffles the text
+    // once, as a doc-keyed repartition here would have.
+    val words = docs
       .select(col("doc_id"), col("text"), split(col("text"), " ").as("w"))
     // fused kernel ≡ transform(sequence(0, ceil(size(w)/segWords)-1),
     //   i => array_join(slice(w, i*segWords+1, segWords), " ")) —
@@ -490,10 +489,10 @@ object Dedup {
     // word sequence exactly, so keeping all segments ≡ the original
     // text). §2.3 / guide §8: shuffle the lightweight proxy, move the
     // heavy bytes once.
-    val segs = GraftCache.persisted("Dedup.seg", words
+    val segs = words
       .select(col("doc_id"), posexplode(segArr).as(Seq("seg_idx", "seg")))
       .select(col("doc_id"), col("seg_idx").cast("long").as("seg_idx"),
-        md5(col("seg")).as("h")))
+        md5(col("seg")).as("h"))
     val hot = segs.groupBy(col("h"))
       .agg(countDistinct(col("doc_id")).as("nd"))
       .filter(col("nd") >= minDocs)
@@ -553,24 +552,22 @@ object Dedup {
   /** The (doc_id, pos, h) sliding-window digest relation shared by
     * [[repeatedSpans]], [[spanDedupClean]] and the span-level
     * decontamination (TextAnalysis.spanDecontaminate): every n-token
-    * window's md5, 1-based start position. `cache = false` skips the
-    * one-slot persist for single-reference uses (q194 builds TWO of
-    * these per query — rotating both would evict each other). */
-  private[graft] def spanShingles(docs: DataFrame, n: Int,
-      cache: Boolean = true): DataFrame = {
+    * window's md5, 1-based start position. Not persisted: callers read
+    * a fresh corpus each time, so a held copy would cost a cache build
+    * (and a job per consumer) and never be reused. */
+  private[graft] def spanShingles(docs: DataFrame, n: Int): DataFrame = {
     // fused kernel ≡ the HOF form `when(size(w) >= n,
     // transform(sequence(1, size(w)-(n-1)), i =>
     //   md5(array_join(slice(w, i, n), " ")))).otherwise(array())`
     // — one pass per document instead of an interpreted lambda + a
     // sliced array + a joined string per window (spec-pinned)
-    val sh = docs
+    docs
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .select(col("doc_id"),
         posexplode(graft.functions.ShingleKernels.window_md5(col("w"), n))
           .as(Seq("off", "h")))
       .select(col("doc_id"), (col("off") + 1).cast("long").as("pos"),
         col("h"))
-    if (cache) GraftCache.persisted("Dedup.span", sh) else sh
   }
 
   /** Same, over an arbitrary (doc_id, text) corpus — lets tests plant a
@@ -1003,8 +1000,8 @@ object Dedup {
     * (8-gram digests are naturally selective — hot grams are exactly
     * the boilerplate the cap reports); the verify side is one
     * (ia, ib)-keyed count plus a doc-keyed size join. No token-level
-    * pair enumeration anywhere. Shares [[spanShingles]]' cached
-    * relation with the q192-q194 span family. */
+    * pair enumeration anywhere. Builds on [[spanShingles]], the
+    * q192-q194 span family's window relation. */
   def containmentJoin(spark: SparkSession, dir: String): DataFrame =
     containmentJoinFrom(Tables(spark, dir).documents)
 

@@ -490,7 +490,10 @@ object GraphOps {
     * `checkpoint()` (checkpoint dir required), so a routing sweep over a
     * cluster survives executor loss with ≤ N-1 supersteps recomputed —
     * the reference's buffer-pool checkpoint analogue
-    * (`buffer_pool.cpp:363-377`) applied to the routing path. */
+    * (`buffer_pool.cpp:363-377`) applied to the routing path. The sweep
+    * stops before `maxHops` once a round adds no (origin, node) row and
+    * lowers no cost — the frontier-empty exit of a BFS, read off one
+    * (count, sum) job over the checkpointed state per round. */
   def multiSourceCostsFrom(spark: SparkSession, edges: DataFrame,
       sources: Seq[Long], maxHops: Int, durableEvery: Int = 0): DataFrame = {
     import spark.implicits._
@@ -501,8 +504,14 @@ object GraphOps {
     // must not leak the cached edge relation for the session
     try {
       var state = sources.map(s => (s, s, 0L)).toDF("origin", "node", "cost")
+      // (row count, cost sum) of the grouped state: rows are never
+      // dropped and a row's cost never rises, so an unchanged pair means
+      // the round added no (origin, node) and lowered no cost — every
+      // later round would reproduce this state, and the sweep stops
+      var seen = (sources.distinct.size.toLong, 0L)
       var hop = 0
-      while (hop < maxHops) {
+      var changed = true
+      while (changed && hop < maxHops) {
         val relaxed = state.alias("s")
           .join(ue.alias("e"), col("s.node") === col("e.src"))
           .select(col("s.origin"), col("e.dst").as("node"),
@@ -517,6 +526,10 @@ object GraphOps {
           if (durableEvery > 0 && (hop + 1) % durableEvery == 0)
             next.checkpoint(true)
           else next.localCheckpoint(true)
+        val now = state.agg(count(lit(1)), coalesce(sum(col("cost")), lit(0L)))
+          .as[(Long, Long)].head()
+        changed = now != seen
+        seen = now
         hop += 1
       }
       state

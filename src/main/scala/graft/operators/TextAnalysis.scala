@@ -176,9 +176,9 @@ object TextAnalysis {
   /** Same, over arbitrary corpus/benchmark (doc_id, text) relations. */
   private[graft] def spanDecontaminateFrom(corpus: DataFrame,
       bench: DataFrame, n: Int = 8): DataFrame = {
-    val benchSet = Dedup.spanShingles(bench, n, cache = false)
+    val benchSet = Dedup.spanShingles(bench, n)
       .select(col("h")).distinct()
-    val masked = Dedup.spanShingles(corpus, n, cache = false)
+    val masked = Dedup.spanShingles(corpus, n)
       .join(broadcast(benchSet), Seq("h"), "left_semi")
       .select(col("doc_id"), col("pos"))
     Dedup.dropCoveredTokens(corpus, masked, n)
@@ -475,9 +475,10 @@ object TextAnalysis {
     * fixture's 31-term vocabulary makes every term frequent, which is
     * exactly the regime where length normalization and tf saturation
     * carry the ranking. Model relations (df, idf) live at vocabulary
-    * scale. Corpus stats, idf and the posting prune are paid once per
-    * posting relation and bound ([[bm25ServeModel]]); a repeated serve
-    * pays only the query-dependent tail. */
+    * scale. Corpus stats and idf are paid once per posting relation,
+    * the posting prune once per relation and bound
+    * ([[bm25ServeModel]]); a repeated serve pays only the
+    * query-dependent tail. */
   def bm25TopK(spark: SparkSession, dir: String): DataFrame =
     bm25TopKFrom(Tables(spark, dir).documents)
 
@@ -551,38 +552,47 @@ object TextAnalysis {
       .orderBy(col("query_id"), col("rk"))
   }
 
-  /** The batch-independent half of a BM25 serve, frozen per posting
-    * relation and bound: the persisted (t, idf_q) relation and the
-    * persisted (t, cid, impact) kept postings. Held in one
-    * [[GraftCache.trained]] slot keyed on the same analyzed plan as the
-    * `TextAnalysis.bm` posting slot, so the corpus-stats job, the idf
-    * aggregate and the posting prune run once per (relation, bound),
-    * not once per request; a retrain unpersists the replaced pair. The
-    * stored-bound guard runs on EVERY call before the slot is
-    * consulted, so an over-bound request fails each time and never
-    * evicts a held model. */
+  /** The batch-independent half of a BM25 serve: the persisted
+    * (t, idf_q) relation and the persisted (t, cid, impact) kept
+    * postings, each in its own [[GraftCache.trained]] slot keyed on the
+    * same analyzed plan as the `TextAnalysis.bm` posting slot. The idf
+    * (with the corpus-stats job behind it) is keyed on the posting
+    * relation alone, the kept postings also on the bound, so a changed
+    * bound re-runs only the posting prune; a retrain unpersists the
+    * frame it replaces. The stored-bound guard runs on EVERY call
+    * before the slots are consulted, so an over-bound request fails
+    * each time and never evicts a held model. */
   private[graft] def bm25ServeModel(cc: DataFrame,
       postingBound: Int): (DataFrame, DataFrame) = {
     bm25CheckStoredBound(cc, postingBound)
-    GraftCache.trained("TextAnalysis.bmModel", cc, Seq(postingBound),
-      (m: (DataFrame, DataFrame)) => {
-        m._1.unpersist(); m._2.unpersist(); ()
-      }) {
-      val (idf, kept) = bm25ModelOf(cc, postingBound)
-      (idf.persist(),
-        kept.select(col("t"), col("cid"), col("impact")).persist())
+    val (idf, avgdl) = GraftCache.trained("TextAnalysis.bmIdf", cc, Nil,
+      (m: (DataFrame, Double)) => { m._1.unpersist(); () }) {
+      val (idf, avgdl) = bm25IdfModel(cc)
+      (idf.persist(), avgdl)
     }
+    val kept = GraftCache.trained("TextAnalysis.bmKept", cc,
+      Seq(postingBound), (k: DataFrame) => { k.unpersist(); () }) {
+      bm25KeptFor(cc, idf, avgdl, postingBound)
+        .select(col("t"), col("cid"), col("impact")).persist()
+    }
+    (idf, kept)
   }
 
   /** The one construction of the model relations — (t, idf_q) and the
     * kept (t, cid, impact, prk) prefix — shared by the serve model and
     * q246's compaction annotation, so a stored prefix equals the
-    * serve-time prune by construction. One eager job: the corpus stats. */
+    * serve-time prune by construction. */
   private def bm25ModelOf(cc: DataFrame,
       postingBound: Int): (DataFrame, DataFrame) = {
-    val (nChunks, avgdl) = bm25CorpusStats(cc)
-    val idf = bm25IdfOf(cc, nChunks)
+    val (idf, avgdl) = bm25IdfModel(cc)
     (idf, bm25KeptFor(cc, idf, avgdl, postingBound))
+  }
+
+  /** The bound-free half of the model: (t, idf_q) and avgdl. One eager
+    * job: the corpus stats. */
+  private def bm25IdfModel(cc: DataFrame): (DataFrame, Double) = {
+    val (nChunks, avgdl) = bm25CorpusStats(cc)
+    (bm25IdfOf(cc, nChunks), avgdl)
   }
 
   /** Whether a posting relation carries q246's materialized `prk`
@@ -694,7 +704,7 @@ object TextAnalysis {
       .withColumn("pbound", pboundCol(Bm25PostingBound.toLong))
 
   /** (N, avgdl) of a posting relation — one grouped pass, run once per
-    * model build ([[bm25ModelOf]]), so serve and compaction cannot
+    * model build ([[bm25IdfModel]]), so serve and compaction cannot
     * derive different corpus statistics. */
   private def bm25CorpusStats(cc: DataFrame): (Long, Double) = {
     val st = cc.groupBy(col("cid")).agg(first(col("len")).as("len"))

@@ -382,7 +382,7 @@ object StreamingDedup {
   def spanBatch(batch: DataFrame, storeDir: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
     if (Snapshots.committed(spark, s"$storeDir/wcounts", batchId)) return
-    val sh = Dedup.spanShingles(batch, 8, cache = false)
+    val sh = Dedup.spanShingles(batch, 8)
     sh.write.mode("overwrite").parquet(s"$storeDir/windows/b=$batchId")
     sh.groupBy(col("h")).agg(count(lit(1)).as("n"))
       .write.mode("overwrite").parquet(s"$storeDir/wcounts/b=$batchId")

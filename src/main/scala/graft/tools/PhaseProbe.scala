@@ -200,10 +200,10 @@ object PhaseProbe {
       }
       val docs = t.documents
       time("spans stage: shingle explode (HOF transform + md5)") {
-        noop(graft.operators.Dedup.spanShingles(docs, 8, cache = false))
+        noop(graft.operators.Dedup.spanShingles(docs, 8))
       }
       time("spans stage: shingle explode again (no cache)") {
-        noop(graft.operators.Dedup.spanShingles(docs, 8, cache = false))
+        noop(graft.operators.Dedup.spanShingles(docs, 8))
       }
     }
 

@@ -1153,6 +1153,55 @@ class PipelineSpec extends AnyFunSuite {
     assert(slice1 == single, "origin-1 slice diverges from single-source q91")
   }
 
+  test("routing sweep stops once a round changes nothing; costs equal the full sweep") {
+    // path 1-2-3-4 with a costlier 1-3 shortcut, plus an isolated
+    // source 9: the last change is round 3 (4's cost drops 11 -> 8), so
+    // round 4 changes nothing and the sweep must stop there whatever
+    // maxHops allows — the same jobs at maxHops 4 and 40, and the costs
+    // of the full maxHops-round sweep (replayed in the JVM)
+    import spark.implicits._
+    val es = Seq((1L, 2L, 5L), (2L, 3L, 1L), (3L, 4L, 2L), (1L, 3L, 9L))
+      .flatMap { case (a, b, w) => Seq((a, b, w), (b, a, w)) }
+    val edges = es.toDF("src", "dst", "w")
+    val sources = Seq(1L, 9L)
+    def fullSweep(maxHops: Int): Map[(Long, Long), Long] = {
+      var st = sources.map(s => (s, s) -> 0L).toMap
+      (1 to maxHops).foreach { _ =>
+        val relaxed = for (((o, n), c) <- st.toSeq; (a, b, w) <- es
+          if a == n) yield (o, b) -> (c + w)
+        st = (st.toSeq ++ relaxed).groupMapReduce(_._1)(_._2)(math.min)
+      }
+      st
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def sweep(maxHops: Int): (Map[(Long, Long), Long], Int) = {
+      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+      jobs.set(0)
+      val got = GraphOps.multiSourceCostsFrom(spark, edges, sources, maxHops)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
+        .toMap
+      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+      (got, jobs.get())
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (at2, _) = sweep(2)
+      val (at4, jobs4) = sweep(4)
+      val (at40, jobs40) = sweep(40)
+      assert(at2 == fullSweep(2) && at2((1L, 4L)) == 11L,
+        "the hop cap must still bind before the sweep converges")
+      assert(at4 == fullSweep(4) && at40 == fullSweep(40) && at40 == at4)
+      assert(at40((1L, 4L)) == 8L && at40((9L, 9L)) == 0L)
+      assert(jobs40 == jobs4,
+        s"maxHops 40 ran $jobs40 jobs, maxHops 4 ran $jobs4: no early stop")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("multi-source BFS batch: per-origin slice equals single-source BFS") {
     // One k-source sweep must give, for every origin, exactly the hop
     // distances a dedicated single-source BFS (the oracle-checked q32
@@ -3252,10 +3301,13 @@ class PipelineSpec extends AnyFunSuite {
     assert(serve(128) == first, "a warm serve must equal the first")
     val at64 = serve(64)
     val m64 = model(64)
-    // (idf does not depend on the bound: the retrained idf re-persists
-    // the released one's plan, so only the kept postings read NONE)
+    // idf does not depend on the bound: its slot is keyed on the
+    // posting relation alone, so a bound change retrains only `kept`
+    // and the held idf is the very same frame
     assert(!same(m64, m128) && m128._2.storageLevel == StorageLevel.NONE,
       "a changed posting bound must retrain and release the old model")
+    assert((m64._1 eq m128._1) && m64._1.storageLevel != StorageLevel.NONE,
+      "a changed posting bound must keep the held idf")
     assert(serve(128) == first && !same(model(128), m64) &&
       m64._2.storageLevel == StorageLevel.NONE)
     assert(narrowServe(128) == narrowBatch)

@@ -270,4 +270,72 @@ class PlanSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.adaptive.enabled", prevA)
     }
   }
+
+  test("corpus-cleaning ops (q121/q137/q193/q196): no persist, bounded write stages, one bucket histogram") {
+    // Each op reads a fresh shard, so a persist slot is a cache build
+    // plus a job per consumer that is never reused, and every query
+    // stage is a Spark job on a shard this size. Pinned on the write the
+    // op ends in: no InMemoryRelation, at most `maxStages` query stages
+    // in the final AQE plan, and q196's model as ONE bucket-keyed
+    // histogram (target and raw counts side by side).
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Final
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val maxStages = Map("q121_full_pipeline" -> 7,
+      "q137_repeated_segment_removal" -> 7, "q193_span_dedup_clean" -> 6,
+      "q196_dsir_importance" -> 3)
+    // a fresh copy of sf0.001, as each op reads a fresh shard: Spark's
+    // cache manager would otherwise substitute a relation another spec
+    // persisted over the same files
+    val shard = java.nio.file.Files.createTempDirectory("graft_clean_shard")
+    java.nio.file.Files.list(java.nio.file.Paths.get(sf)).forEach(f =>
+      java.nio.file.Files.copy(f, shard.resolve(f.getFileName)))
+    val out = java.nio.file.Files.createTempDirectory("graft_clean_ops")
+    spark.listenerManager.register(listener)
+    try maxStages.foreach { case (q, bound) =>
+      plans.clear()
+      val df = SparkEntry.queries(q)(spark, shard.toString)
+      val cached = df.queryExecution.optimizedPlan
+        .collect { case r: InMemoryRelation => r }
+      assert(cached.isEmpty, s"$q persists a frame it never reuses")
+      df.write.mode("overwrite").parquet(s"$out/$q")
+      org.apache.spark.sql.graft.bridge.waitListenerBus(spark)
+      val all = plans.asScala.toSeq.map(nodes)
+      val write = all.filter(_.exists(_.isInstanceOf[DataWritingCommandExec]))
+      assert(write.size == 1, s"$q: ${write.size} write plans")
+      val stages = write.head.count(_.isInstanceOf[QueryStageExec])
+      assert(stages <= bound, s"$q: $stages query stages in its write (at most $bound)")
+      if (q.startsWith("q196")) {
+        val byBucket = all.flatten.collect {
+          case a: BaseAggregateExec
+            if a.aggregateExpressions.forall(_.mode == Final) &&
+              (a.groupingExpressions match {
+                case Seq(at: Attribute) => at.name == "b"
+                case _ => false
+              }) => a
+        }
+        assert(byBucket.size == 1,
+          s"q196: ${byBucket.size} final aggregates keyed on the bucket alone")
+      }
+    } finally spark.listenerManager.unregister(listener)
+  }
 }

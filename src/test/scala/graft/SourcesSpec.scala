@@ -59,6 +59,39 @@ class SourcesSpec extends AnyFunSuite {
     assert(diffs.isEmpty, diffs.mkString("\n"))
   }
 
+  test("Tables reads schemas from parquet footers: equal to Spark's inference, no job") {
+    // the footer-read schema must be exactly what spark.read.parquet
+    // infers, for every fixture table at both scales (events before its
+    // ts normalization), and building a table must submit no Spark job
+    val names = Seq("region", "nation", "customer", "supplier", "part",
+      "orders", "lineitem", "events", "documents", "embeddings")
+    val sf01 = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
+    for (dir <- Seq(sf, sf01); name <- names) {
+      val want = spark.read.parquet(s"$dir/$name.parquet").schema
+      assert(Tables(spark, dir).read(name).schema == want, s"$dir $name")
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf(f: => Unit): Int = {
+      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+      jobs.set(0)
+      f
+      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+      jobs.get()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(jobsOf(Tables(spark, sf).documents) == 0,
+        "building a table must submit no Spark job")
+      // the listener sees the job the footer read replaces
+      assert(jobsOf(spark.read.parquet(s"$sf/documents.parquet")) >= 1)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("binaryFile source ingests media blobs (multimodal ingest path)") {
     // Production multimodal ingest: media arrive as FILES; the engine
     // reads them with the built-in `binaryFile` source into the same
