@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * q198/q200/q223/q226/q231/q244/q247/q248 PQ/IVFADC, q68 IVF).
   *
   * The higher-order formulations these replace —
-  * `transform(cbLit, cw => aggregate(zip_with(e, cw, (x,y) => (x-y)*(x-y)),
+  * `transform(cb, cw => aggregate(zip_with(e, cw, (x,y) => (x-y)*(x-y)),
   * 0L, _+_))` and friends — are `HigherOrderFunction`s, which do NOT
   * participate in whole-stage codegen: every element evaluation goes
   * through an interpreted lambda with boxed longs and an allocated
@@ -243,8 +243,8 @@ case class CentArgmin(child: Expression, cents: Array[Array[Long]])
     copy(child = newChild)
 }
 
-/** vec − cents[cell] (element-wise long subtraction) — the literal-path
-  * residualize kernel; `cell` is the row's assigned coarse cell. */
+/** vec − cents[cell] (element-wise long subtraction) — the
+  * `residualize` kernel; `cell` is the row's assigned coarse cell. */
 case class CentResidual(left: Expression, right: Expression,
     cents: Array[Array[Long]]) extends BinaryExpression {
   override def equals(o: Any): Boolean = o match {
@@ -306,7 +306,7 @@ case class CentResidual(left: Expression, right: Expression,
 }
 
 /** PQ encode: codes[m] = argmin_j L2(vec[m·sub .. m·sub+sub), cb[m][j]),
-  * first-min tie-break — the fused `pqEncodeLit` codes kernel. Reads
+  * first-min tie-break — the fused `pqEncode` codes kernel. Reads
   * exactly the first M·sub elements (the `slice` window); a shorter
   * vector throws. */
 case class PqCodes(child: Expression, cb: Array[Array[Array[Long]]])
@@ -386,7 +386,7 @@ case class PqCodes(child: Expression, cb: Array[Array[Array[Long]]])
 }
 
 /** PQ query LUT: lut[m][j] = L2(vec[m·sub .. m·sub+sub), cb[m][j]) —
-  * the fused `pqQueryLutsLit` / `pqEncodeLit` query kernel. */
+  * the fused `pqQueryLuts` / `pqEncode` query kernel. */
 case class PqLut(child: Expression, cb: Array[Array[Array[Long]]])
     extends UnaryExpression {
   override def equals(o: Any): Boolean = o match {
@@ -626,52 +626,6 @@ case class VecL2Q(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Element-wise long subtraction — the broadcast-path residualize
-  * kernel. */
-case class VecSubQ(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "vec_sub_q"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"vec_sub_q expects two array<long> arguments, got " +
-          s"${l.catalogString}, ${r.catalogString}")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    require(y.numElements() == n,
-      s"vec_sub_q: dimension mismatch ($n vs ${y.numElements()})")
-    val out = new Array[Long](n)
-    var i = 0
-    while (i < n) { out(i) = x.getLong(i) - y.getLong(i); i += 1 }
-    UnsafeArrayData.fromPrimitiveArray(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val out = ctx.freshName("out")
-      s"""
-         |int $n = $x.numElements();
-         |if ($y.numElements() != $n) throw new IllegalArgumentException(
-         |  "vec_sub_q: dimension mismatch (" + $n + " vs " + $y.numElements() + ")");
-         |long[] $out = new long[$n];
-         |for (int $i = 0; $i < $n; $i++) { $out[$i] = $x.getLong($i) - $y.getLong($i); }
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 /** Count of positions where two equal-length long arrays agree ≡
   * `size(filter(zip_with(a, b, _ === _), identity))` — the minhash
   * signature-agreement estimator (q42/q129/q168 funnel verify and the
@@ -811,8 +765,6 @@ object QuantKernels {
     column(AdcDistLut(expression(lut), expression(codes)))
   def vec_l2q(a: Column, b: Column): Column =
     column(VecL2Q(expression(a), expression(b)))
-  def vec_sub_q(a: Column, b: Column): Column =
-    column(VecSubQ(expression(a), expression(b)))
   def sorted_inter_count(a: Column, b: Column): Column =
     column(SortedInterCount(expression(a), expression(b)))
   def vec_eq_count(a: Column, b: Column): Column =

@@ -358,16 +358,17 @@ object CorpusOps {
     // fused kernel ≡ the HOF form transform(sequence(0, nc-1), i =>
     //   slice(w, i*stride+1, sizeW)) with nc = 1 + greatest(0,
     //   (size(w) - sizeW + stride-1) div stride) folded in (spec-pinned).
-    // Null-text note: the HOF form emitted ONE (0, null) chunk row for a
-    // null text (greatest(0, null) = 0 → nc = 1 → slice(null) = null);
-    // the kernel emits none — unreachable either way (documents.text is
-    // non-null by fixture contract; both oracle gates pass at both SFs)
-    // and no consumer distinguishes the two (all aggregate per chunk).
+    // Null-text note: a null text yields ONE (doc_id, 0, null) chunk
+    // row, as the q144 oracle does (greatest(0, NULL) = 0 → one window
+    // over a NULL list). The kernel maps null to null, so the outer
+    // explode keeps the row and chunk_idx is pinned to 0; a non-null
+    // text never yields an empty window array (`split` never does).
     docs.select(col("doc_id"), split(col("text"), " ").as("w"))
       .select(col("doc_id"),
-        posexplode(graft.functions.ShingleKernels
+        posexplode_outer(graft.functions.ShingleKernels
           .chunk_windows(col("w"), sizeW, stride))
           .as(Seq("chunk_idx", "arr")))
+      .withColumn("chunk_idx", coalesce(col("chunk_idx"), lit(0)))
   }
 
   /** Training-shard assignment (q141) — the WebDataset-style layout step

@@ -603,9 +603,8 @@ object Similarity {
     * engines, runs, and partitionings, hence a full DuckDB oracle.
     *
     * Scale shape per iteration: assignment is one codegen'd map over the
-    * quantized scan (K×Dim literal centroids under the shared inline
-    * budget, a broadcast centroid relation past it — the q128 dispatch,
-    * unified in [[assignQuantizedCells]]);
+    * quantized scan ([[assignQuantizedCells]]'s fused kernel holds the
+    * K×Dim centroids as one array, so any K plans the same);
     * centroid update is one (cell, component) partial+final aggregate —
     * ≤ K·Dim result rows, collected to the driver exactly like the
     * GlobalOrder bucket offsets. Nothing in the loop scans more than
@@ -613,11 +612,13 @@ object Similarity {
   def kmeansCells(spark: SparkSession, dir: String): DataFrame =
     kmeansCellsFrom(graft.Tables(spark, dir).embeddings, k = 8, iters = 3)
 
-  /** Literal-path quantized (integer squared-L2) argmin assignment:
-    * K×Dim centroid components inlined as literal arrays, one codegen'd
-    * map over the scan, `array_position` first-min tie-break (lowest
-    * cell id). Output: (vec_id, e, cell, dist_q). */
-  private[graft] def assignQuantizedCellsLit(eq: DataFrame,
+  /** Quantized (integer squared-L2) argmin assignment — one rule for
+    * the whole integer-quantizer family (q142 k-means, q159 coarse
+    * cells): one codegen'd map over the scan, `array_position`
+    * first-min tie-break (lowest cell id). The fused kernel holds the
+    * centroids as one array and loops over it, so no K×Dim literal tree
+    * reaches Catalyst at any K. Output: (vec_id, e, cell, dist_q). */
+  private[graft] def assignQuantizedCells(eq: DataFrame,
       cents: Array[Array[Long]]): DataFrame = {
     // fused argmin kernel ≡ the transform/zip_with/aggregate distance
     // array + array_position(array_min) first-min rule (the HOF chain
@@ -630,46 +631,14 @@ object Similarity {
         element_at(col("ad"), 2).as("dist_q"))
   }
 
-  /** Broadcast-relation quantized assignment — the scale path past the
-    * inline budget (the q128 tradeoff, shared constant
-    * [[MaxInlineCentroidDoubles]]): centroids as a broadcast TABLE, the
-    * SAME integer distance fold per (vec, cell) row, and a (dist asc,
-    * cell asc) row_number that reproduces the literal path's first-min
-    * tie-break exactly — bit-equal by construction, asserted in
-    * PipelineSpec (the q128 precedent). */
-  private[graft] def assignQuantizedCellsBcast(eqd: DataFrame,
-      cents: Array[Array[Long]]): DataFrame = {
-    val spark = eqd.sparkSession
-    import spark.implicits._
-    val centDf = cents.toIndexedSeq.zipWithIndex
-      .map { case (c, i) => (i.toLong, c.toSeq) }.toDF("cell", "c")
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("dist_q").asc, col("cell").asc)
-    eqd.join(broadcast(centDf))
-      .withColumn("dist_q",
-        graft.functions.QuantKernels.vec_l2q(col("e"), col("c")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("e"), col("cell"), col("dist_q"))
-  }
-
-  /** The literal/broadcast dispatch for fixed-point centroid sets —
-    * one rule for the whole integer-quantizer family (q142 k-means,
-    * q148/q159 PQ), same budget as the cosine family's
-    * [[assignCellsFlatAuto]]. */
-  private[graft] def assignQuantizedCells(eq: DataFrame,
-      cents: Array[Array[Long]]): DataFrame =
-    if (cents.length.toLong * cents.headOption.map(_.length).getOrElse(0)
-        <= MaxInlineCentroidDoubles) assignQuantizedCellsLit(eq, cents)
-    else assignQuantizedCellsBcast(eq, cents)
-
   /** The Lloyd loop itself, factored so the IVF coarse quantizer
     * (q159/q179) trains its cells through the SAME fixed-point rule as
     * q142: seeds = the K lowest-id vectors' quantized components, then
     * `iters` rounds of (integer-L2 argmin assignment → per-(cell,
     * component) floor-mean update), empty cells carrying forward. Per
-    * round: one assignment map over the scan + a ≤ K·Dim-row aggregate
-    * collected to the driver (the GlobalOrder-offsets collect scale).
+    * round: one [[assignQuantizedCells]] kernel map over the scan (any
+    * K) + a ≤ K·Dim-row aggregate collected to the driver (the
+    * GlobalOrder-offsets collect scale).
     *
     * `sampleMod` bounds the TRAINING relation to the deterministic
     * `vec_id % sampleMod == 0` subset (seeds included — they are the
@@ -715,10 +684,8 @@ object Similarity {
   }
 
   /** Same, over an arbitrary (vec_id, embedding) relation. Assignment
-    * via the shared literal/broadcast dispatch: K×Dim under the inline
-    * budget stays a codegen'd literal map; past it (e.g. K=160 × 64
-    * dims) the centroids ride a broadcast relation instead of a
-    * Catalyst literal tree. */
+    * is the fused [[assignQuantizedCells]] map at every K (ScaleSmoke
+    * runs K=160 × 64 dims through the same plan as K=8). */
   def kmeansCellsFrom(vecs: DataFrame, k: Int, iters: Int): DataFrame = {
     val eq = GraftCache.persisted("Similarity.km", quantized(vecs))
     val cents = trainQuantizedCents(eq, k, iters)
@@ -741,32 +708,20 @@ object Similarity {
 
   /** Top-`nprobe` quantized cells per query — the probe-side sibling of
     * [[assignQuantizedCells]] (same integer squared-L2, same
-    * (dist asc, cell asc) tie rule, same literal/broadcast dispatch),
-    * keeping the best `nprobe` cells instead of the single argmin.
-    * Output: (query_id, cell), 0-based cells. */
+    * (dist asc, cell asc) tie rule), keeping the best `nprobe` cells
+    * instead of the single argmin. One fused all-distances kernel map,
+    * centroids held as one array at any K. Output: (query_id, cell),
+    * 0-based cells. */
   private[graft] def probeQuantizedCells(eqQ: DataFrame,
       cents: Array[Array[Long]], nprobe: Int): DataFrame = {
     val wp = Window.partitionBy(col("query_id"))
       .orderBy(col("dist_c").asc, col("cell").asc)
-    val scored =
-      if (cents.length.toLong * cents.headOption.map(_.length).getOrElse(0)
-          <= MaxInlineCentroidDoubles) {
-        // fused all-distances kernel ≡ the transform/zip_with/aggregate
-        // distance array (QuantKernelsSpec asserts bit-equality)
-        val d = graft.functions.QuantKernels.cent_dists(col("e"), cents)
-        eqQ.select(col("vec_id").as("query_id"),
-          posexplode(d).as(Seq("cell", "dist_c")))
-      } else {
-        val spark = eqQ.sparkSession
-        import spark.implicits._
-        val centDf = cents.toIndexedSeq.zipWithIndex
-          .map { case (c, i) => (i.toLong, c.toSeq) }.toDF("cell", "c")
-        eqQ.select(col("vec_id").as("query_id"), col("e"))
-          .join(broadcast(centDf))
-          .withColumn("dist_c",
-            graft.functions.QuantKernels.vec_l2q(col("e"), col("c")))
-      }
-    scored.withColumn("pr", row_number().over(wp))
+    // fused all-distances kernel ≡ the transform/zip_with/aggregate
+    // distance array (QuantKernelsSpec asserts bit-equality)
+    val d = graft.functions.QuantKernels.cent_dists(col("e"), cents)
+    eqQ.select(col("vec_id").as("query_id"),
+        posexplode(d).as(Seq("cell", "dist_c")))
+      .withColumn("pr", row_number().over(wp))
       .filter(col("pr") <= nprobe)
       .select(col("query_id"), col("cell").cast("long").as("cell"))
   }
@@ -779,25 +734,14 @@ object Similarity {
     * subtraction in the shared floor(x·10⁶) fixed-point space —
     * components stay within ±2.2·10⁶, squared sub-distances within
     * ~3·10¹⁴ (Long-safe) — so the whole residual composition keeps the
-    * bit-stable cross-engine contract. Same literal/broadcast dispatch
-    * as the assignment family. */
+    * bit-stable cross-engine contract. One fused kernel map, centroids
+    * held as one array at any K. */
   private[graft] def residualize(assigned: DataFrame,
       cents: Array[Array[Long]]): DataFrame =
-    if (cents.length.toLong * cents.headOption.map(_.length).getOrElse(0)
-        <= MaxInlineCentroidDoubles) {
-      // fused kernel ≡ zip_with(e, cents[cell], _ - _)
-      assigned.select(col("vec_id"), col("cell"),
-        graft.functions.QuantKernels
-          .cent_residual(col("e"), col("cell"), cents).as("e"))
-    } else {
-      val spark = assigned.sparkSession
-      import spark.implicits._
-      val centDf = cents.toIndexedSeq.zipWithIndex
-        .map { case (c, i) => (i.toLong, c.toSeq) }.toDF("cell", "rc")
-      assigned.join(broadcast(centDf), Seq("cell"))
-        .select(col("vec_id"), col("cell"),
-          graft.functions.QuantKernels.vec_sub_q(col("e"), col("rc")).as("e"))
-    }
+    // fused kernel ≡ zip_with(e, cents[cell], _ - _)
+    assigned.select(col("vec_id"), col("cell"),
+      graft.functions.QuantKernels
+        .cent_residual(col("e"), col("cell"), cents).as("e"))
 
   // --------------------------------------- product quantization + ADC
 
@@ -821,9 +765,10 @@ object Similarity {
     * seeding rule; training them further is [[kmeansCellsFrom]] per
     * sub-space).
     *
-    * Scale shape: the codebook is a driver-side 16-row collect inlined
-    * as literals (4×16×16 longs — metadata); ENCODING is one codegen'd
-    * map pass over the corpus (no shuffle, no join); queries with their
+    * Scale shape: the codebook is a driver-side 16-row collect held by
+    * the fused kernels as one array (4×16×16 longs — metadata);
+    * ENCODING is one codegen'd map pass over the corpus (no shuffle, no
+    * join); queries with their
     * LUTs are BROADCAST (query batches are small by definition); the
     * per-(query, vector) work is M element_at lookups; the only shuffle
     * is the per-query top-k window, partitioned by query. The corpus is
@@ -837,48 +782,18 @@ object Similarity {
   private val PqSub = 16     // dims per sub-space (M × Sub = Dim = 64)
   private val PqK = 16       // codewords per sub-space
 
-  /** One sizing rule for every codebook literal/broadcast dispatch:
-    * the component count is M·K·(ACTUAL sub-space width) — read off
-    * the codebook's own shape, not the PqSub constant, because the
-    * width-parameterized rungs (q244's 1×16, q247's 2×8) carry
-    * non-default widths and the constant would mis-size them (2× over
-    * for 2×8; a hypothetical sub > 16 would under-size and inline an
-    * over-large literal tree). */
-  private[graft] def cbFitsInline(cb: Array[Array[Array[Long]]]): Boolean =
-    cb.length.toLong * PqK *
-      cb.headOption.flatMap(_.headOption).map(_.length).getOrElse(0) <=
-      MaxInlineCentroidDoubles
-
-  /** PQ encode + query-LUT core shared by q148 (flat ADC) and q159
-    * (IVFADC): returns (codes: (neighbor_id, codes), queries:
-    * (query_id, lut)). One quantized scan feeds both. The codebook
-    * rides the same literal/broadcast dispatch as the flat quantizers:
-    * M·K·Sub components under [[MaxInlineCentroidDoubles]] inline as a
-    * literal tree (the registered 4·16·16 = 1024 does), past it the
-    * codebook becomes a broadcast (m, j, cw) relation. */
-  private def pqEncode(vecs: DataFrame,
-      queryMod: Long): (DataFrame, DataFrame) = {
-    val eq = GraftCache.persisted("Similarity.pq", quantized(vecs))
-    // codebook: sub-vectors of the PqK lowest-id vectors — metadata collect
-    val seeds: Array[Array[Long]] = eq.orderBy(col("vec_id")).limit(PqK)
-      .collect().map(_.getSeq[Long](1).toArray)
-    val cb: Array[Array[Array[Long]]] = Array.tabulate(PqM) { m =>
-      seeds.map(_.slice(m * PqSub, (m + 1) * PqSub))
-    }
-    if (cbFitsInline(cb))
-      pqEncodeLit(eq, cb, queryMod)
-    else pqEncodeBcast(eq, cb, queryMod)
-  }
-
-  /** Literal-path PQ encode: the codebook inlined as a nested literal
-    * array, encoding one codegen'd map pass, no shuffle. */
-  private[graft] def pqEncodeLit(eq: DataFrame, cb: Array[Array[Array[Long]]],
+  /** PQ encode + query-LUT core shared by q148 (flat ADC), q158
+    * (trained ADC) and the IVFADC encode: returns (codes: (neighbor_id,
+    * codes), queries: (query_id, lut)) over one quantized relation.
+    * Encoding is one codegen'd map pass, no shuffle; the fused kernels
+    * hold the codebook as one array and read every sub-space width off
+    * its own shape (4×16 full index, q244's 1×16, q247's 2×8 prefix). */
+  private[graft] def pqEncode(eq: DataFrame, cb: Array[Array[Array[Long]]],
       queryMod: Long): (DataFrame, DataFrame) = {
     // fused codegen kernels ≡ the per-(m, j) transform/zip_with/
     // aggregate sub-distance chain with array_position(array_min)
-    // first-min encode — sub-space width still derives from the
-    // codebook's own shape (4×16 full index, q247 2×8 prefix);
-    // QuantKernelsSpec asserts bit-equality against the HOF forms.
+    // first-min encode; QuantKernelsSpec asserts bit-equality against
+    // the HOF forms.
     // ENCODE: codes[m] = argmin_j (ties → lowest j); one map pass
     val codes = eq.withColumn("codes",
       graft.functions.QuantKernels.pq_codes(col("e"), cb))
@@ -890,98 +805,18 @@ object Similarity {
     (codes, queries)
   }
 
-  /** Broadcast-path PQ encode — the scale branch past the inline
-    * budget: the codebook as a broadcast (m, j, cw) relation joined to
-    * the per-(vector, sub-space) explosion, argmin per (vec, m) as a
-    * min-of-struct partial+final aggregate (lexicographic (dist, j) —
-    * exactly the literal path's lowest-j tie-break), codes/LUTs
-    * reassembled in m (and j) order with sorted collect_lists.
-    * Bit-equal to [[pqEncodeLit]] by construction; asserted in
-    * PipelineSpec. */
-  private[graft] def pqEncodeBcast(eqd: DataFrame,
-      cb: Array[Array[Array[Long]]],
-      queryMod: Long): (DataFrame, DataFrame) = {
-    val spark = eqd.sparkSession
-    import spark.implicits._
-    val cbDf = (for { m <- cb.indices; j <- cb(m).indices }
-      yield (m, j.toLong, cb(m)(j).toSeq)).toDF("m", "j", "cw")
-    val pqSub = cb.head.head.length
-    val sub = eqd.select(col("vec_id"),
-        posexplode(transform(sequence(lit(0), lit(cb.length - 1)), m =>
-          slice(col("e"), (m * lit(pqSub) + 1).cast("int"), lit(pqSub))))
-          .as(Seq("m", "sv")))
-      .join(broadcast(cbDf), Seq("m"))
-      .withColumn("dist",
-        graft.functions.QuantKernels.vec_l2q(col("sv"), col("cw")))
-    val codes = sub.groupBy(col("vec_id"), col("m"))
-      .agg(min(struct(col("dist"), col("j"))).getField("j").as("code"))
-      .groupBy(col("vec_id"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("m"), col("code")))),
-        p => p.getField("code")).as("codes"))
-      .select(col("vec_id").as("neighbor_id"), col("codes"))
-    val queries = sub.filter(col("vec_id") % queryMod === 0)
-      .groupBy(col("vec_id"), col("m"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("j"), col("dist")))),
-        p => p.getField("dist")).as("larr"))
-      .groupBy(col("vec_id"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("m"), col("larr")))),
-        p => p.getField("larr")).as("lut"))
-      .select(col("vec_id").as("query_id"), col("lut"))
-    (codes, queries)
-  }
-
   /** Per-(query, probed cell) ADC lookup tables over a RESIDUAL query
     * relation (query_id, cell, e = query − centroid(cell)): LUT[m][j] =
     * integer squared-L2 from the query's residual sub-vector m to
     * codeword cb[m][j]. In residual IVFADC the LUT is per (query, cell)
     * — the query's residual differs in every probed cell — where flat
     * ADC has one LUT per query. nprobe·queries rows of M·K longs:
-    * metadata, broadcast by the caller. Same literal/broadcast codebook
-    * dispatch and (j-, m-)ordered reassembly as the encode family. */
+    * metadata, broadcast by the caller. One codegen'd map, the same
+    * fused LUT kernel as [[pqEncode]]'s queries. */
   private[graft] def pqQueryLuts(qres: DataFrame,
       cb: Array[Array[Array[Long]]]): DataFrame =
-    if (cbFitsInline(cb))
-      pqQueryLutsLit(qres, cb)
-    else pqQueryLutsBcast(qres, cb)
-
-  /** Literal-path per-(query, cell) LUTs: codebook inlined, one
-    * codegen'd map over the residual query relation. */
-  private[graft] def pqQueryLutsLit(qres: DataFrame,
-      cb: Array[Array[Array[Long]]]): DataFrame =
-    // fused kernel ≡ the per-(m, j) sub-distance HOF chain
     qres.select(col("query_id"), col("cell"),
       graft.functions.QuantKernels.pq_lut(col("e"), cb).as("lut"))
-
-  /** Broadcast-path per-(query, cell) LUTs — the scale branch past the
-    * inline budget, (j-, m-)ordered reassembly exactly like
-    * [[pqEncodeBcast]]'s query LUTs; bit-equal to the literal path by
-    * construction (asserted in PipelineSpec). */
-  private[graft] def pqQueryLutsBcast(qres: DataFrame,
-      cb: Array[Array[Array[Long]]]): DataFrame = {
-    val spark = qres.sparkSession
-    import spark.implicits._
-    val cbDf = (for { m <- cb.indices; j <- cb(m).indices }
-      yield (m, j.toLong, cb(m)(j).toSeq)).toDF("m", "j", "cw")
-    qres.select(col("query_id"), col("cell"),
-        posexplode(transform(sequence(lit(0), lit(cb.length - 1)), m =>
-          slice(col("e"), (m * lit(cb.head.head.length) + 1).cast("int"),
-            lit(cb.head.head.length))))
-          .as(Seq("m", "sv")))
-      .join(broadcast(cbDf), Seq("m"))
-      .withColumn("dist",
-        graft.functions.QuantKernels.vec_l2q(col("sv"), col("cw")))
-      .groupBy(col("query_id"), col("cell"), col("m"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("j"), col("dist")))),
-        p => p.getField("dist")).as("larr"))
-      .groupBy(col("query_id"), col("cell"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("m"), col("larr")))),
-        p => p.getField("larr")).as("lut"))
-  }
 
   /** ADC distance from the query's LUT over the neighbor's codes — the
     * sub-space count derives from the row's own codes array, so the
@@ -1048,7 +883,7 @@ object Similarity {
         slice(col("e"), (m * lit(pqSub) + 1).cast("int"), lit(pqSub))))
         .as(Seq("m", "sv")))
     for (_ <- 1 to iters) {
-      // fused kernel ≡ transform(cbLit[m], cw =>
+      // fused kernel ≡ transform(cb[m], cw =>
       //   aggregate(zip_with(sv, cw, (x,y) => (x-y)*(x-y)), 0L, _+_))
       val d = graft.functions.QuantKernels
         .sub_cent_dists(col("sv"), col("m"), cb)
@@ -1081,27 +916,16 @@ object Similarity {
     * quantization granularity (M=4, K=16), not training. */
   private[graft] val PqTrainIters = 10
 
-  /** Encode with a TRAINED codebook (q158): per-sub-space Lloyd from
-    * the seed codebook, then the shared literal/broadcast encode
-    * dispatch. */
-  private def pqEncodeTrained(vecs: DataFrame, queryMod: Long,
-      iters: Int): (DataFrame, DataFrame) = {
-    val eqd = GraftCache.persisted("Similarity.pq", quantized(vecs))
-    val cb = GraftCache.trained("Similarity.cb", eqd, Seq(iters))(
-      pqTrainCodebook(eqd, iters))
-    if (cbFitsInline(cb))
-      pqEncodeLit(eqd, cb, queryMod)
-    else pqEncodeBcast(eqd, cb, queryMod)
-  }
-
   /** Same, over an arbitrary (vec_id, embedding) relation. `queryMod`
     * picks the query subset (vec_id % queryMod == 0) — ScaleSmoke scales
     * it with the corpus to hold the query batch size fixed, isolating
     * the per-query linear ADC scan from the fixture's query-count
-    * growth. */
+    * growth. The codebook is the untrained seed one: 0 Lloyd rounds
+    * of [[pqTrainCodebook]]. */
   def pqAdcTopKFrom(vecs: DataFrame, topK: Int = 3,
       queryMod: Long = 50L): DataFrame = {
-    val (codes, queries) = pqEncode(vecs, queryMod)
+    val eq = GraftCache.persisted("Similarity.pq", quantized(vecs))
+    val (codes, queries) = pqEncode(eq, pqTrainCodebook(eq, 0), queryMod)
     adcRank(codes, queries, topK).orderBy(col("query_id"), col("rk"))
   }
 
@@ -1160,10 +984,12 @@ object Similarity {
     * and SCALING.md. */
   private[graft] val IvfTrainSampleMod = 4L
 
-  /** Same, over an arbitrary (vec_id, embedding) relation. `trainIters`
-    * selects the PQ codebook rung and `coarseIters` the coarse-cell
-    * rung (0 = the untrained seeds — the prior-round baselines the
-    * recall gate measures training against). */
+  /** Same, over an arbitrary (vec_id, embedding) relation: the
+    * train → encode → serve pipeline run once over `vecs`, queries the
+    * `vec_id % queryMod == 0` rows. `trainIters` selects the PQ codebook
+    * rung and `coarseIters` the coarse-cell rung (0 = the untrained
+    * seeds — the prior-round baselines the recall gate measures
+    * training against). */
   def ivfAdcTopKFrom(vecs: DataFrame, topK: Int = AnnTopK,
       queryMod: Long = 50L,
       k: Int = 16, nprobe: Int = AnnNprobe,
@@ -1171,88 +997,61 @@ object Similarity {
       coarseIters: Int = IvfCoarseIters,
       pqM: Int = PqM, pqSub: Int = PqSub,
       sampleMod: Long = 1L): DataFrame = {
-    // TRAINED coarse quantizer (the q142 fixed-point Lloyd rule): cells
-    // live in the same floor(x·1e6) integer space as the PQ codes, so
-    // corpus assignment and query probes are integer L2 — bit-stable,
-    // and the oracle replays the coarse training unroll exactly like
-    // the PQ one.
-    val eqd = GraftCache.persisted("Similarity.pq", quantized(vecs))
-    val coarse = GraftCache.trained("Similarity.coarse", eqd,
-        Seq(k, coarseIters, sampleMod.toInt))(
-      trainQuantizedCents(eqd, k, coarseIters, sampleMod))
-    val assigned = assignQuantizedCells(eqd, coarse)
-    // RESIDUAL encoding (the Jégou IVFADC rule): the codebook trains on
-    // and encodes x − centroid(cell(x)); its cache key carries the
-    // coarse rung (k, coarseIters) the residuals depend on.
-    val res = residualize(assigned, coarse)
-    val cb = GraftCache.trained("Similarity.cbRes", eqd,
-        Seq(trainIters, k, coarseIters, pqM, pqSub, sampleMod.toInt))(
-      pqTrainCodebook(res.select(col("vec_id"), col("e")), trainIters,
-        sampleMod, pqM = pqM, pqSub = pqSub))
-    val codes = (if (cbFitsInline(cb))
-        pqEncodeLit(res.select(col("vec_id"), col("e")), cb, queryMod)
-      else pqEncodeBcast(res.select(col("vec_id"), col("e")), cb,
-        queryMod))._1
-    val corpusCells = assigned
-      .select(col("vec_id").as("neighbor_id"), col("cell"))
-    val qProbes = probeQuantizedCells(
-      eqd.filter(col("vec_id") % queryMod === 0), coarse, nprobe)
-    // per-(query, probed cell) residuals → per-cell LUTs
-    val qres = residualize(
-      qProbes.join(eqd.select(col("vec_id"), col("e")),
-        qProbes("query_id") === eqd("vec_id"))
-        .select(col("vec_id"), col("e"), col("cell")), coarse)
-      .select(col("vec_id").as("query_id"), col("cell"), col("e"))
-    val qLuts = pqQueryLuts(qres, cb)
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist"), col("neighbor_id"))
-    codes
-      .join(corpusCells, Seq("neighbor_id"))
-      .join(broadcast(qLuts), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("adc_dist", adcDist)
-      .withColumn("rk", row_number().over(wq).cast("long"))
-      .filter(col("rk") <= topK)
-      .select(col("query_id"), col("rk"), col("neighbor_id"), col("adc_dist"))
-      .orderBy(col("query_id"), col("rk"))
+    val (coarse, cb) = ivfAdcTrain(vecs, k, coarseIters, trainIters,
+      sampleMod, pqM, pqSub)
+    ivfAdcServe(ivfAdcEncode(vecs, coarse, cb),
+      vecs.filter(col("vec_id") % queryMod === 0), coarse, cb, topK, nprobe)
   }
 
-  /** Frozen-quantizer training for the streaming ingest rung (q226):
-    * the coarse cells + residual-PQ codebook q159 trains, returned as
-    * driver-side metadata so a stream can encode micro-batches under a
-    * FROZEN index (the q133/q135 train-on-snapshot posture). Both
-    * rungs share the caches, so training replays are free within a
-    * session. */
-  private[graft] def ivfAdcTrain(vecs: DataFrame, k: Int = 16,
-      coarseIters: Int = IvfCoarseIters,
-      trainIters: Int = PqTrainIters, sampleMod: Long = 1L)
-      : (Array[Array[Long]], Array[Array[Array[Long]]]) = {
-    val eqd = GraftCache.persisted("Similarity.pq", quantized(vecs))
-    val coarse = GraftCache.trained("Similarity.coarse", eqd,
+  /** The trained coarse cells of a quantized relation, held in one
+    * cache slot under one param shape for every IVF caller (q159's
+    * train, q200's sample, q244/q247's read-mass probe), so no caller
+    * evicts another's cells. */
+  private def coarseCents(eqd: DataFrame, k: Int, coarseIters: Int,
+      sampleMod: Long): Array[Array[Long]] =
+    GraftCache.trained("Similarity.coarse", eqd,
         Seq(k, coarseIters, sampleMod.toInt))(
       trainQuantizedCents(eqd, k, coarseIters, sampleMod))
-    val cbEqd = assignQuantizedCells(eqd, coarse)
+
+  /** Frozen-quantizer training — the TRAIN step of q159's pipeline and
+    * of the streaming ingest rung (q226): the coarse cells + residual-PQ
+    * codebook, returned as driver-side metadata so a stream can encode
+    * micro-batches under a FROZEN index (the q133/q135
+    * train-on-snapshot posture). Coarse cells follow the q142
+    * fixed-point Lloyd rule, so corpus assignment and query probes are
+    * integer L2 and the oracle replays the coarse unroll exactly like
+    * the PQ one. The codebook trains on RESIDUALS x − centroid(cell(x))
+    * (the Jégou IVFADC rule); its cache key carries the coarse rung
+    * (k, coarseIters, sampleMod) the residuals depend on. `pqM`/`pqSub`
+    * shape the codebook for non-64-dim inputs (q244's 1×16, q247's
+    * 2×8). Both artifacts are cached per input plan, so training
+    * replays are free within a session. */
+  private[graft] def ivfAdcTrain(vecs: DataFrame, k: Int = 16,
+      coarseIters: Int = IvfCoarseIters,
+      trainIters: Int = PqTrainIters, sampleMod: Long = 1L,
+      pqM: Int = PqM, pqSub: Int = PqSub)
+      : (Array[Array[Long]], Array[Array[Array[Long]]]) = {
+    val eqd = GraftCache.persisted("Similarity.pq", quantized(vecs))
+    val coarse = coarseCents(eqd, k, coarseIters, sampleMod)
     val cb = GraftCache.trained("Similarity.cbRes", eqd,
-        Seq(trainIters, k, coarseIters, sampleMod.toInt))(
-      pqTrainCodebook(residualize(cbEqd, coarse)
-        .select(col("vec_id"), col("e")), trainIters, sampleMod))
+        Seq(trainIters, k, coarseIters, pqM, pqSub, sampleMod.toInt))(
+      pqTrainCodebook(residualize(assignQuantizedCells(eqd, coarse), coarse)
+        .select(col("vec_id"), col("e")), trainIters, sampleMod,
+        pqM = pqM, pqSub = pqSub))
     (coarse, cb)
   }
 
   /** Encode a (vec_id, embedding) batch under a frozen quantizer:
-    * (vec_id, cell, codes) — the index rows a streaming ingest appends.
-    * Identical arithmetic to the one-shot q159 encode (same assign /
-    * residualize / PQ-argmin components, same inline-vs-broadcast
-    * dispatch), so batch-wise encoding is exactly the one-shot index
-    * for ANY batching. */
+    * (vec_id, cell, codes) — the ENCODE step of q159's pipeline and the
+    * index rows a streaming ingest appends. Assign, residualize and
+    * PQ-argmin are one fused kernel map each, so batch-wise encoding is
+    * exactly the one-shot index for ANY batching. */
   private[graft] def ivfAdcEncode(batch: DataFrame,
       coarse: Array[Array[Long]],
       cb: Array[Array[Array[Long]]]): DataFrame = {
-    val eqb = quantized(batch)
-    val assigned = assignQuantizedCells(eqb, coarse)
+    val assigned = assignQuantizedCells(quantized(batch), coarse)
     val res = residualize(assigned, coarse).select(col("vec_id"), col("e"))
-    val codes = (if (cbFitsInline(cb)) pqEncodeLit(res, cb, Long.MaxValue)
-      else pqEncodeBcast(res, cb, Long.MaxValue))._1
+    val codes = pqEncode(res, cb, Long.MaxValue)._1
     assigned.select(col("vec_id"), col("cell"))
       .join(codes.withColumnRenamed("neighbor_id", "vec_id"), Seq("vec_id"))
   }
@@ -1267,8 +1066,9 @@ object Similarity {
       .select(col("vec_id"), col("cell"), col("dist_q"))
 
   /** Serve per-query ADC top-k from a STORED (vec_id, cell, codes)
-    * relation under the same frozen quantizer — q159's probe/LUT/rank
-    * tail re-rooted on the accumulated store. */
+    * relation under the same frozen quantizer — the SERVE step of
+    * q159's pipeline: probe the `nprobe` best cells, broadcast per-(query,
+    * probed cell) residual LUTs, rank on the cell equi-join. */
   private[graft] def ivfAdcServe(stored: DataFrame, queryVecs: DataFrame,
       coarse: Array[Array[Long]], cb: Array[Array[Array[Long]]],
       topK: Int = AnnTopK, nprobe: Int = AnnNprobe): DataFrame = {
@@ -1319,10 +1119,12 @@ object Similarity {
     * when the codebook fits the data. */
   def pqRecallEvalFrom(vecs: DataFrame, queryMod: Long = 50L,
       trainIters: Int = PqTrainIters): DataFrame = {
-    val (codes, luts) = pqEncodeTrained(vecs, queryMod, trainIters)
+    val eq = GraftCache.persisted("Similarity.pq", quantized(vecs))
+    val cb = GraftCache.trained("Similarity.cb", eq, Seq(trainIters))(
+      pqTrainCodebook(eq, trainIters))
+    val (codes, luts) = pqEncode(eq, cb, queryMod)
     val approx = adcRank(codes, luts, topK = 3)
       .select(col("query_id"), col("neighbor_id"))
-    val eq = GraftCache.persisted("Similarity.pq", quantized(vecs))
     val queries = eq.filter(col("vec_id") % queryMod === 0)
       .select(col("vec_id").as("query_id"), col("e").as("qe"))
     val wq = Window.partitionBy(col("query_id"))
@@ -1475,8 +1277,8 @@ object Similarity {
     * reproducible across runs, engines, and corpus growth (a vector's
     * selection changes only if its cell gains lower-hash members).
     *
-    * Scale shape: one assignment pass over the scan (literal/broadcast
-    * dispatch, the shared quantizer rule), then a per-cell top-quota
+    * Scale shape: one assignment pass over the scan (the shared
+    * quantizer kernel), then a per-cell top-quota
     * window over cells of ~N/K rows — K-bounded parallelism with NO
     * global sort, and the training cost rides the cached
     * train-once-freeze artifact. Output is ≤ K·quota rows. */
@@ -1488,9 +1290,7 @@ object Similarity {
       k: Int = 16, quota: Int = ClusterSampleQuota,
       coarseIters: Int = IvfCoarseIters): DataFrame = {
     val eqd = GraftCache.persisted("Similarity.pq", quantized(vecs))
-    val coarse = GraftCache.trained("Similarity.coarse", eqd,
-        Seq(k, coarseIters))(
-      trainQuantizedCents(eqd, k, coarseIters))
+    val coarse = coarseCents(eqd, k, coarseIters, 1L)
     val w = Window.partitionBy(col("cell"))
       .orderBy(col("u"), col("vec_id"))
     assignQuantizedCells(eqd, coarse)
@@ -1847,9 +1647,7 @@ object Similarity {
   private def mrlLutReads(corpus: DataFrame, m: Int, out: String,
       queryMod: Long): DataFrame = {
     val eqd = GraftCache.persisted("Similarity.pq", quantized(corpus))
-    val coarse = GraftCache.trained("Similarity.coarse", eqd,
-        Seq(16, IvfCoarseIters))(
-      trainQuantizedCents(eqd, 16, IvfCoarseIters))
+    val coarse = coarseCents(eqd, 16, IvfCoarseIters, 1L)
     val sizes = assignQuantizedCells(eqd, coarse)
       .groupBy(col("cell")).agg(count(lit(1)).as("n"))
     probeQuantizedCells(eqd.filter(col("vec_id") % queryMod === 0),

@@ -266,12 +266,11 @@ object ScaleSmoke {
         println(s"[scale]   kmeans: vectors=${a.count()} cells_used=$cells")
         cells
       }
-      // K=160: 160×64 = 10,240 centroid components — past the inline
-      // budget, so the shared dispatch routes assignment through the
-      // broadcast centroid relation instead of a Catalyst literal tree
-      // (bit-equal; spec'd). Cost must stay ~K/8 × the row above, not
-      // blow up on plan analysis time.
-      time(s"kmeans_k160_broadcast") {
+      // K=160: 160×64 = 10,240 centroid components, assigned by the
+      // same fused kernel as the row above (it holds the centroids as
+      // one array, no Catalyst literal tree). Cost must stay ~K/8 × the
+      // row above, not blow up on plan analysis time.
+      time(s"kmeans_k160") {
         val a = graft.operators.Similarity
           .kmeansCellsFrom(vecs, k = 160, iters = 1)
         val cells = a.select(col("cell")).distinct().count()

@@ -6,7 +6,7 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
-import graft.operators.GraftCache
+import graft.operators.{GraftCache, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
@@ -61,6 +61,21 @@ class GraftCacheSpec extends AnyFunSuite {
     assert(train(sf, 2) == 20 && calls == 2)
     assert(train(sf, 2) == 20 && calls == 2)
     assert(train(sf01, 2) == 20 && calls == 3)
+  }
+
+  test("IVF quantizers: one key each for coarse cells and codebook across callers") {
+    // train (q231), one-shot rank (q223) and cluster sampling (q200)
+    // share the coarse-cell and residual-codebook slots; none of them
+    // may evict what another trained on the same input
+    val t = Tables(spark, sf)
+    val cv = Similarity.chunkVectors(t.documents, t.embeddings)
+    val (coarse, cb) = Similarity.ivfAdcTrain(cv)
+    assert(Similarity.ivfAdcTopKFrom(cv).collect().nonEmpty)
+    assert(Similarity.clusterBalancedSampleFrom(cv).collect().nonEmpty)
+    val (coarse2, cb2) = Similarity.ivfAdcTrain(cv)
+    val (sameCoarse, sameCb) = (coarse2 eq coarse, cb2 eq cb)
+    assert(sameCoarse, "coarse cells were retrained")
+    assert(sameCb, "residual codebook was retrained")
   }
 
   test("two sessions over one context do not share slots") {

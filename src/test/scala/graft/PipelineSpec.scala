@@ -633,6 +633,16 @@ class PipelineSpec extends AnyFunSuite {
       Seq((0L, 2L, "tiny doc")), "short docs chunk to themselves")
   }
 
+  test("chunk windows: a null text yields one (doc_id, 0, NULL, NULL) row") {
+    import spark.implicits._
+    // the q144 oracle's shape: greatest(0, len(NULL)) = 0 → one window
+    // over a NULL list
+    val docs = Seq((0L, Some("a b c")), (1L, Option.empty[String]))
+      .toDF("doc_id", "text")
+    val out = graft.operators.CorpusOps.chunkWindowsFrom(docs).collect()
+    assert(out.toSeq == Seq(Row(0L, 0L, 3L, "a b c"), Row(1L, 0L, null, null)))
+  }
+
   test("unigram surprisal: exact fixed-point values; rare-token docs outscore common-token docs") {
     import spark.implicits._
     // corpus: "common" x 8 across docs, "rare" once; doc 2 is all-common
@@ -1263,37 +1273,64 @@ class PipelineSpec extends AnyFunSuite {
       s"assignment diverged on ${lit.count { case (k, v) => bc.get(k) != Some(v) }} vectors")
   }
 
-  test("quantized (k-means/PQ) dispatch: broadcast branch ≡ literal branch") {
-    // the fixed-point sibling of the flat-quantizer dispatch test above:
-    // same integer distance fold, same lowest-cell/lowest-j tie-break,
-    // compared bit-for-bit on the fixture corpus
+  test("quantized assign/probe/residualize at K = 160 ≡ in-JVM brute force") {
+    // 160 × 64 = 10,240 centroid components, past the old literal-tree
+    // budget: the fused kernels hold the centroids as one array at any
+    // K. Reference: integer squared-L2, lowest cell on a tie.
     val eq = graft.Tables(spark, sf).embeddings
       .select(col("vec_id"),
         transform(col("embedding"),
           x => floor(x.cast("double") * lit(1e6)).cast("long")).as("e"))
-    // k-means assignment: 12 centroids seeded from the lowest-id vectors
-    val cents = eq.orderBy(col("vec_id")).limit(12)
-      .collect().map(_.getSeq[Long](1).toArray)
-    def asg(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("vec_id"), col("cell"), col("dist_q")).collect()
-        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    val la = asg(Similarity.assignQuantizedCellsLit(eq, cents))
-    val ba = asg(Similarity.assignQuantizedCellsBcast(eq, cents))
-    assert(la.nonEmpty && la == ba)
-    // PQ encode: codebook from the 16 lowest-id vectors (the q148 rule)
-    val seeds = eq.orderBy(col("vec_id")).limit(16)
-      .collect().map(_.getSeq[Long](1).toArray)
-    val cb = Array.tabulate(4)(m => seeds.map(_.slice(m * 16, (m + 1) * 16)))
-    val (cl, ql) = Similarity.pqEncodeLit(eq, cb, queryMod = 50L)
-    val (cbc, qbc) = Similarity.pqEncodeBcast(eq, cb, queryMod = 50L)
-    val codesL = cl.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val codesB = cbc.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(codesL.nonEmpty && codesL == codesB)
-    val lutL = ql.collect()
-      .map(r => r.getLong(0) -> r.getSeq[Seq[Long]](1)).toMap
-    val lutB = qbc.collect()
-      .map(r => r.getLong(0) -> r.getSeq[Seq[Long]](1)).toMap
-    assert(lutL.nonEmpty && lutL == lutB)
+    val vecs = eq.collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toArray)
+      .sortBy(_._1)
+    assert(vecs.length > 200)
+    val cents = vecs.take(160).map(_._2.clone())
+    assert(cents.length.toLong * cents.head.length >
+      Similarity.MaxInlineCentroidDoubles)
+    def l2(a: Array[Long], b: Array[Long]): Long =
+      a.indices.map(i => (a(i) - b(i)) * (a(i) - b(i))).sum
+    // forced tie: cells 20 and 10 sit at ±1 per component around vector
+    // `tied`, so both are 64 away from it and every other cell is
+    // farther; the lowest cell (10) must win
+    val (tied, te) = vecs.drop(160).find { case (_, e) =>
+      cents.indices.forall(j => j == 10 || j == 20 || l2(e, cents(j)) > 64L)
+    }.get
+    cents(20) = te.map(_ - 1L)
+    cents(10) = te.map(_ + 1L)
+    def ranked(e: Array[Long]): Seq[(Long, Int)] =
+      cents.indices.map(j => (l2(e, cents(j)), j)).sortBy(identity)
+    val ref = vecs.map { case (id, e) => id -> ranked(e) }.toMap
+    val asg = Similarity.assignQuantizedCells(eq, cents)
+    val got = asg.select(col("vec_id"), col("cell"), col("dist_q")).collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    assert(got.size == vecs.length)
+    vecs.foreach { case (id, _) =>
+      val (d, j) = ref(id).head
+      assert(got(id) == ((j.toLong, d)), s"assignment of vec $id")
+    }
+    assert(got(tied) == ((10L, 64L)), "tie must break to the lowest cell")
+    // probe: the nprobe best cells per query, ties again to the lowest
+    for (nprobe <- Seq(1, 4)) {
+      val probed = Similarity.probeQuantizedCells(eq, cents, nprobe)
+        .collect().groupBy(_.getLong(0))
+        .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
+      assert(probed.size == vecs.length)
+      vecs.foreach { case (id, _) =>
+        assert(probed(id) == ref(id).take(nprobe).map(_._2.toLong).toSet,
+          s"probe of vec $id at nprobe $nprobe")
+      }
+      assert(probed(tied).contains(10L))
+    }
+    // residualize: exactly e − cents(cell), component-wise
+    val res = Similarity.residualize(asg, cents).collect()
+    assert(res.length == vecs.length)
+    val byId = vecs.toMap
+    res.foreach { r =>
+      val (id, cell, re) = (r.getLong(0), r.getLong(1), r.getSeq[Long](2))
+      val e = byId(id)
+      assert(re == e.indices.map(i => e(i) - cents(cell.toInt)(i)),
+        s"residual of vec $id")
+    }
   }
 
   test("semantic keep-list: group semantics vs q128's per-pair rule on a chain") {
@@ -2080,7 +2117,7 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("residual IVFADC: round-trip, clustered recall, LUT dispatch parity") {
+  test("residual IVFADC: round-trip, clustered recall") {
     import spark.implicits._
     // clustered corpus (see the recall-gate spec): each query's true
     // neighbors live in its own cluster, whose cell the probe covers
@@ -2121,18 +2158,6 @@ class PipelineSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(rec.nonEmpty && rec.forall(_._2 == 3L),
       s"clustered residual recall@3 must be full: ${rec.toSeq}")
-    // per-(query, cell) LUT dispatch: broadcast branch ≡ literal branch
-    val seeds = eq.orderBy(col("vec_id")).limit(16)
-      .collect().map(_.getSeq[Long](1).toArray)
-    val cb = Array.tabulate(4)(m => seeds.map(_.slice(m * 16, (m + 1) * 16)))
-    val qres = Similarity.residualize(assigned, cents)
-      .filter(col("vec_id") % 8 === 0)
-      .select(col("vec_id").as("query_id"), col("cell"), col("e"))
-    def luts(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getSeq[Seq[Long]](2)).toMap
-    val ll = luts(Similarity.pqQueryLutsLit(qres, cb))
-    val lb = luts(Similarity.pqQueryLutsBcast(qres, cb))
-    assert(ll.nonEmpty && ll == lb)
     // fixture: well-formed ranks, no self-matches
     val fx = Similarity.ivfAdcTopK(spark, sf).collect()
     assert(fx.nonEmpty)

@@ -66,7 +66,7 @@ class QuantKernelsSpec extends AnyFunSuite {
       col("disth") =!= element_at(col("ak"), 2)).count() == 0L)
   }
 
-  test("cent_residual / vec_sub_q ≡ zip_with subtraction") {
+  test("cent_residual ≡ zip_with subtraction") {
     val df = vecsDf(64, 150, 3L)
     val cents = centsOf(df, 16)
     val cl = array(cents.map(c => array(c.map(lit(_)): _*)): _*)
@@ -76,10 +76,7 @@ class QuantKernelsSpec extends AnyFunSuite {
         zip_with(col("e"), element_at(cl, (col("cell") + 1).cast("int")),
           (x, c) => x - c))
       .withColumn("rk", cent_residual(col("e"), col("cell"), cents))
-      .withColumn("sh", zip_with(col("e"), col("rh"), (x, y) => x - y))
-      .withColumn("sk", vec_sub_q(col("e"), col("rh")))
     assert(q.filter(col("rh") =!= col("rk")).count() == 0L)
-    assert(q.filter(col("sh") =!= col("sk")).count() == 0L)
   }
 
   test("vec_l2q ≡ aggregate(zip_with(sq diff))") {
@@ -252,7 +249,6 @@ class QuantKernelsSpec extends AnyFunSuite {
         .withColumn("qv", quantize_vec(col("embedding")))
         .withColumn("a", cent_argmin(col("e"), cents))
         .withColumn("sd", sub_cent_dists(slice(col("e"), 1, 16), lit(0L), cb))
-        .withColumn("sq", vec_sub_q(col("e"), col("e")))
         .withColumn("d", cent_dists(col("e"), cents))
         .withColumn("r", cent_residual(col("e"), lit(0L), cents))
         .withColumn("c", pq_codes(col("e"), cb))
