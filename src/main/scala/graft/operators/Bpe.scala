@@ -44,10 +44,10 @@ import org.apache.spark.sql.functions._
   * containing the merged pair, rewrites only those words, and adds
   * their post-rewrite mass back, so round cost tracks AFFECTED-word
   * mass (for real vocabularies a vanishing fraction past the first few
-  * merges), not the vocabulary. Lineage is cut per round
-  * (localCheckpoint, the louvainMovePhase discipline). A broadcast of
-  * the ≤vocab (word → n_tokens) relation back onto the corpus scan and
-  * one per-doc aggregate finish the job: nothing after the first
+  * merges), not the vocabulary. Each round is cut and the round before
+  * released by [[Fixpoint.advance]]. A broadcast of the ≤vocab
+  * (word → n_tokens) relation back onto the corpus scan and one per-doc
+  * aggregate finish the job: nothing after the first
   * aggregate touches corpus-scale data, so 100 TB costs two corpus
   * passes total. Training is cached per corpus snapshot
   * ([[GraftCache.trained]], the train-once-freeze posture).
@@ -153,18 +153,18 @@ object Bpe {
     *      fraction once the first merges specialize);
     *   4. vocabulary = untouched ∪ rewritten.
     * Zero-mass pairs are dropped so the carried relation never grows
-    * past the live pair set. Both carried relations are
-    * localCheckpoint'ed per round (eager, lineage cut — the
-    * louvainMovePhase discipline), so nothing ever replays the raw
-    * corpus: training reads the corpus exactly once, in wordCounts.
+    * past the live pair set. Both carried relations go through
+    * [[Fixpoint.advance]] per round (cut, then the round before
+    * released), so nothing ever replays the raw corpus: training reads
+    * the corpus exactly once, in wordCounts.
     * Exactness: integer adds/subtracts of exactly the mass that moved;
     * unaffected words' strings are byte-identical so their pair mass
     * cannot change. */
   private[graft] def trainMergesDelta(wc: DataFrame,
       rounds: Int): Seq[(String, String, Long)] = {
-    var cur = wc.select(col("w"), col("cnt"), wrapped(col("w")).as("s"))
-      .localCheckpoint(true)
-    var pc = pairCounts(cur).localCheckpoint(true)
+    var cur = Fixpoint.cut(
+      wc.select(col("w"), col("cnt"), wrapped(col("w")).as("s")))
+    var pc = Fixpoint.cut(pairCounts(cur))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
     var done = false
     for (_ <- 1 to rounds if !done) {
@@ -181,18 +181,17 @@ object Bpe {
         val rewritten = affected.select(col("w"), col("cnt"),
           call_function("replace", col("s"),
             lit(pat), lit(S1 + pa + pb + S2)).as("s"))
-        pc = pc
+        pc = Fixpoint.advance(pc, pc
           .unionByName(pairCounts(affected)
             .select(col("pa"), col("pb"), (-col("n")).as("n")))
           .unionByName(pairCounts(rewritten))
           .groupBy(col("pa"), col("pb")).agg(sum(col("n")).as("n"))
-          .filter(col("n") > 0)
-          .localCheckpoint(true)
-        cur = cur.filter(!col("s").contains(pat))
-          .unionByName(rewritten)
-          .localCheckpoint(true)
+          .filter(col("n") > 0))
+        cur = Fixpoint.advance(cur, cur.filter(!col("s").contains(pat))
+          .unionByName(rewritten))
       }
     }
+    Fixpoint.release(cur); Fixpoint.release(pc)
     merges.toSeq
   }
 

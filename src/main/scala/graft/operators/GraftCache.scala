@@ -61,10 +61,12 @@ object GraftCache {
   /** Persist `df` and hold it in `slot`, unpersisting the frame the slot
     * held for a different analyzed plan. Returns the caller's frame, not
     * the held one: the two have equal plans but different attribute ids,
-    * and the caller's later column references are to its own. */
+    * and the caller's later column references are to its own. Only a
+    * build persists: a same-plan call's frame already reads the held
+    * cache through Spark's CacheManager. */
   def persisted(slot: String, df: DataFrame): DataFrame = {
-    df.persist()
-    trained(slot, df, Nil, (held: DataFrame) => { held.unpersist(); () })(df)
+    trained(slot, df, Nil, (held: DataFrame) => { held.unpersist(); () })(
+      df.persist())
     df
   }
 

@@ -38,26 +38,33 @@ import org.apache.spark.storage.StorageLevel
   *  - q39: GraphX's strongly-connected-components library routine.
   * Components for the dedup keep-lists (q129/q133/q136) go through
   * [[canonicalIds]].
+  *
+  * Every iterative DataFrame loop here — the routing sweeps, the k-core
+  * and k-truss peels, Louvain, label propagation, PageRank and HITS —
+  * runs through [[Fixpoint.run]]: each round's output is cut by an eager
+  * `localCheckpoint` (a reliable `checkpoint` every `durableEvery`-th
+  * round where a loop takes that argument), the round before is released
+  * once the next is cut, and a loop with a convergence signature stops
+  * after the first round that leaves the signature unchanged. Only
+  * [[betweennessFrom]], whose backward pass reads every forward level,
+  * keeps its own lazy cuts.
   */
 object GraphOps {
 
-  /** Max customer key per fixture dir = node-id domain size; a 1-row
-    * aggregate (metadata derivation, not a data-path collect), memoized so
-    * a multi-query run (Verify sweeps 11+ graph queries) derives the
-    * constant once instead of rescanning `customer` per query. Same
-    * immutable-fixture caveat as [[GraftCache]]. */
-  private[graft] val maxCustCache =
-    scala.collection.concurrent.TrieMap[String, Long]()
-
-  private def maxCust(t: Tables): Long =
-    maxCustCache.getOrElseUpdate(t.dir, {
+  /** Max customer key = node-id domain size; a 1-row aggregate (metadata
+    * derivation, not a data-path collect), held in a trained slot keyed
+    * on the customer relation, so a multi-query run (Verify sweeps 11+
+    * graph queries) derives the constant once per session instead of
+    * rescanning `customer` per query. */
+  private[graft] def maxCust(t: Tables): Long =
+    GraftCache.trained("GraphOps.maxCust", t.customer, Nil) {
       val r = t.customer.agg(max(col("c_custkey"))).head()
       // max() over zero rows is NULL — fail with a real message instead
       // of an opaque NPE from getLong, for every graph query at once
       require(!r.isNullAt(0),
         s"empty customer fixture at ${t.dir}: node-id domain is empty")
       r.getLong(0)
-    })
+    }
 
   /** Directed edge list derived from orders (deduplicated). */
   def directedEdges(t: Tables): DataFrame = {
@@ -308,8 +315,8 @@ object GraphOps {
     * Given equal asymptotics, carrying the output payload wins: no
     * second reconstruction pass, and the per-level merge is a codegen'd
     * (cost, pk) window sort instead of interpreted per-message list
-    * compares (the previous GraphX form). Each level cuts lineage via
-    * localCheckpoint; the window is partitioned by vertex (never global).
+    * compares (the previous GraphX form). The window is partitioned by
+    * vertex (never global).
     * This DP is the exact shape of the DuckDB oracle's unrolled levels,
     * so results are bit-identical by construction. */
   def ssspPaths(spark: SparkSession, dir: String, source: Long = 1L,
@@ -328,11 +335,8 @@ object GraphOps {
   def multiSourcePaths(spark: SparkSession, dir: String,
       sources: Seq[Long] = Seq(1L, 2L, 3L, 4L, 5L),
       maxHops: Int = 8): DataFrame =
-    multiSourcePathsFrom(spark,
-      symmetrizedEdges(Tables(spark, dir))
-        .select(col("src"), col("dst"),
-          edgeWeight(col("src"), col("dst")).as("w")),
-      sources, maxHops)
+    multiSourcePathsFrom(spark, weightedEdges(Tables(spark, dir)), sources,
+      maxHops)
 
   /** Same, over an arbitrary weighted edge relation (src, dst, w) —
     * the ScaleSmoke entry point. */
@@ -348,12 +352,11 @@ object GraphOps {
       // lpad TRUNCATES (not just pads) in both Spark and DuckDB, so a
       // narrower pad would silently corrupt the "lexicographically
       // smallest path" tie-break for ids >= 10^width (large-SF custkeys)
-      var state = sources.toDF("origin").select(
+      val init = sources.toDF("origin").select(
         col("origin"), col("origin").as("node"), lit(0L).as("cost"),
         col("origin").cast("string").as("path"),
         lpad(col("origin").cast("string"), 19, "0").as("pk"))
-      var hop = 0
-      while (hop < maxHops) {
+      val (state, _) = Fixpoint.run(init, maxHops) { (state, _) =>
         val expanded = state.alias("s")
           .join(ue.alias("e"), col("s.node") === col("e.src"))
           .select(col("s.origin"), col("e.dst").as("node"),
@@ -362,11 +365,9 @@ object GraphOps {
               col("e.dst").cast("string")).as("path"),
             concat(col("s.pk"), lit("."),
               lpad(col("e.dst").cast("string"), 19, "0")).as("pk"))
-        state = state.union(expanded)
+        state.union(expanded)
           .withColumn("rn", row_number().over(byNode))
           .filter(col("rn") === 1).drop("rn")
-          .localCheckpoint(true)
-        hop += 1
       }
       state.select(col("origin"), col("node"), col("cost"), col("path"))
         .orderBy(col("origin"), col("node"))
@@ -478,61 +479,39 @@ object GraphOps {
     * routing (q124) and the landmark index build (q125). */
   def multiSourceCosts(spark: SparkSession, dir: String,
       sources: Seq[Long], maxHops: Int): DataFrame =
-    multiSourceCostsFrom(spark,
-      symmetrizedEdges(Tables(spark, dir))
-        .select(col("src"), col("dst"),
-          edgeWeight(col("src"), col("dst")).as("w")),
-      sources, maxHops)
+    multiSourceCostsFrom(spark, weightedEdges(Tables(spark, dir)), sources,
+      maxHops)
 
   /** Same, over an arbitrary weighted edge relation (src, dst, w).
-    * `durableEvery` follows the pageRankFrom policy: 0 = executor-local
-    * lineage cuts only; N > 0 = every Nth superstep writes a RELIABLE
-    * `checkpoint()` (checkpoint dir required), so a routing sweep over a
-    * cluster survives executor loss with ≤ N-1 supersteps recomputed —
-    * the reference's buffer-pool checkpoint analogue
-    * (`buffer_pool.cpp:363-377`) applied to the routing path. The sweep
+    * `durableEvery` = N > 0 makes every Nth superstep a reliable
+    * checkpoint (checkpoint dir required; see [[Fixpoint]]). The sweep
     * stops before `maxHops` once a round adds no (origin, node) row and
     * lowers no cost — the frontier-empty exit of a BFS, read off one
-    * (count, sum) job over the checkpointed state per round. */
+    * (count, sum) job over the cut state per round: rows are never
+    * dropped and a row's cost never rises, so an unchanged pair means
+    * every later round would reproduce this state. */
   def multiSourceCostsFrom(spark: SparkSession, edges: DataFrame,
       sources: Seq[Long], maxHops: Int, durableEvery: Int = 0): DataFrame = {
     import spark.implicits._
-    require(durableEvery == 0 || spark.sparkContext.getCheckpointDir.nonEmpty,
-      "durableEvery > 0 needs spark.sparkContext.setCheckpointDir(...)")
     val ue = edges.persist()
     // try/finally: a mid-sweep failure (e.g. the reliable-checkpoint path)
     // must not leak the cached edge relation for the session
     try {
-      var state = sources.map(s => (s, s, 0L)).toDF("origin", "node", "cost")
-      // (row count, cost sum) of the grouped state: rows are never
-      // dropped and a row's cost never rises, so an unchanged pair means
-      // the round added no (origin, node) and lowered no cost — every
-      // later round would reproduce this state, and the sweep stops
-      var seen = (sources.distinct.size.toLong, 0L)
-      var hop = 0
-      var changed = true
-      while (changed && hop < maxHops) {
-        val relaxed = state.alias("s")
-          .join(ue.alias("e"), col("s.node") === col("e.src"))
-          .select(col("s.origin"), col("e.dst").as("node"),
-            (col("s.cost") + col("e.w")).as("cost"))
-        val next = state.union(relaxed)
-          .groupBy(col("origin"), col("node"))
-          .agg(min(col("cost")).as("cost"))
-        // localCheckpoint cuts lineage per superstep — without it the
-        // plan tree (and Catalyst planning time) grows with every hop; a
-        // cluster deployment uses reliable checkpoint instead
-        state =
-          if (durableEvery > 0 && (hop + 1) % durableEvery == 0)
-            next.checkpoint(true)
-          else next.localCheckpoint(true)
-        val now = state.agg(count(lit(1)), coalesce(sum(col("cost")), lit(0L)))
-          .as[(Long, Long)].head()
-        changed = now != seen
-        seen = now
-        hop += 1
-      }
-      state
+      Fixpoint.run(sources.map(s => (s, s, 0L)).toDF("origin", "node", "cost"),
+          maxHops, durableEvery,
+          signature = Some((s: DataFrame) =>
+            s.agg(count(lit(1)), coalesce(sum(col("cost")), lit(0L)))
+              .as[(Long, Long)].head()),
+          initialSignature = Some((sources.distinct.size.toLong, 0L))) {
+        (state, _) =>
+          val relaxed = state.alias("s")
+            .join(ue.alias("e"), col("s.node") === col("e.src"))
+            .select(col("s.origin"), col("e.dst").as("node"),
+              (col("s.cost") + col("e.w")).as("cost"))
+          state.union(relaxed)
+            .groupBy(col("origin"), col("node"))
+            .agg(min(col("cost")).as("cost"))
+      }._1
     } finally ue.unpersist()
   }
 
@@ -574,6 +553,12 @@ object GraphOps {
   private def hopEdges(t: Tables): DataFrame =
     symmetrizedEdges(t).select(col("src"), col("dst"), lit(1L).as("w"))
 
+  /** Symmetrized edges at the deterministic [[edgeWeight]] — the weighted
+    * routing sweep's relation (q91/q124/q125/q127). */
+  private def weightedEdges(t: Tables): DataFrame =
+    symmetrizedEdges(t).select(col("src"), col("dst"),
+      edgeWeight(col("src"), col("dst")).as("w"))
+
   /** Landmark distance index + triangle-inequality bounds — the routing
     * INDEX the reference schema declares but never builds
     * (`DataStructureType::E_INDEX`, `schema.h:63-68`): precompute
@@ -593,8 +578,8 @@ object GraphOps {
     val dsts = Seq(10L, 20L, 30L, 40L, 50L)
     // the index: d(L, n) for every node within the hop horizon (the graph
     // is symmetrized, so d(L, n) = d(n, L)). The sweep result is already
-    // localCheckpoint-materialized, so the two filters below re-read it
-    // without re-traversing — no extra persist needed.
+    // a cut, so the two filters below re-read it without re-traversing —
+    // no extra persist needed.
     val index = multiSourceCosts(spark, dir, landmarks, maxHops)
       .select(col("origin").as("lm"), col("node"), col("cost"))
     val toSrc = index.filter(col("node").isin(sources: _*))
@@ -819,22 +804,19 @@ object GraphOps {
     * degeneracy pass — emitting each surviving node with its residual
     * degree: the ordering primitive community detection and
     * graph-sparsification pipelines run first. Convergence is detected
-    * by a per-round empty-delta check: each round's edge set is an
-    * EAGER localCheckpoint (materialized anyway for lineage
-    * truncation), so the probe is a count over cached partitions, and a
-    * round that drops no node — the edge count is unchanged, and every
-    * dropped node owns ≥1 edge — ends the loop. The DuckDB oracle
-    * unrolls the peel past the fixture's realized round count
-    * (post-fixpoint rounds are the identity, so a longer unroll is
-    * exact; the generator adds slack rounds on top of the realized
-    * ones).
+    * by a per-round empty-delta check: the probe is a count over the
+    * round's cut edge set, and a round that drops no node — the edge
+    * count is unchanged, and every dropped node owns ≥1 edge — ends the
+    * loop. The DuckDB oracle unrolls the peel past the fixture's
+    * realized round count (post-fixpoint rounds are the identity, so a
+    * longer unroll is exact; the generator adds slack rounds on top of
+    * the realized ones).
     *
     * Scale shape per round: one degree aggregate + two semi-joins to
     * keep edges whose BOTH endpoints survive — all keyed by node/edge
-    * id, map-side combinable, nothing global; localCheckpoint truncates
-    * the per-round lineage exactly like the other iterative families,
-    * and the loop depth is the graph's peel depth (≤ its degeneracy
-    * ordering length), not a guess. */
+    * id, map-side combinable, nothing global; the loop depth is the
+    * graph's peel depth (≤ its degeneracy ordering length), not a
+    * guess. */
   def kCore(spark: SparkSession, dir: String, k: Int = 2): DataFrame = {
     val (df, realized) = kCoreWithRounds(undirectedEdges(Tables(spark, dir)), k)
     require(realized <= KCoreOracleUnroll,
@@ -869,23 +851,15 @@ object GraphOps {
     * and unroll-sufficiency specs read the count). */
   private[graft] def kCoreWithRounds(ue: DataFrame, k: Int = 2,
       rounds: Int = Int.MaxValue): (DataFrame, Int) = {
-    var edges = ue.localCheckpoint(true)
-    var nEdges = edges.count()
-    var round = 0
-    var converged = nEdges == 0
-    while (!converged && round < rounds) {
-      val deg = edges.groupBy(col("src").as("node"))
+    val (edges, round) = Fixpoint.run(ue.select(col("src"), col("dst")),
+        rounds, signature = Some((e: DataFrame) => e.count())) { (edges, _) =>
+      val keep = edges.groupBy(col("src").as("node"))
         .agg(count(lit(1)).as("deg"))
-      val keep = deg.filter(col("deg") >= k).select(col("node"))
-      edges = edges
+        .filter(col("deg") >= k).select(col("node"))
+      edges
         .join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
         .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
         .select(col("src"), col("dst"))
-        .localCheckpoint(true)
-      val m = edges.count()
-      converged = m == nEdges
-      nEdges = m
-      round += 1
     }
     (edges.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("residual_deg"))
@@ -910,23 +884,21 @@ object GraphOps {
     * the support aggregate, so support counts are identical to the
     * unoriented formulation — the SQL oracle's a<b<c enumeration is
     * unchanged. Convergence uses the q153 empty-delta probe (edge count
-    * unchanged on an eager localCheckpoint). The DuckDB oracle unrolls
-    * the peel with slack rounds (the identity after the fixpoint),
-    * generated like the q153/q158 unrolls. */
-  def kTruss(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    val (df, realized) = kTrussWithRounds(undirectedEdges(Tables(spark, dir)), k)
+    * unchanged). The DuckDB oracle unrolls the peel with slack rounds
+    * (the identity after the fixpoint), generated like the q153/q158
+    * unrolls. */
+  def kTruss(spark: SparkSession, dir: String, k: Int = 3): DataFrame =
+    kTrussInUnroll(undirectedEdges(Tables(spark, dir)), k, "")
+
+  /** The peel, failing fast when it outruns the oracle's unroll. */
+  private def kTrussInUnroll(ue: DataFrame, k: Int, what: String): DataFrame = {
+    val (df, realized) = kTrussWithRounds(ue, k)
     require(realized <= KTrussOracleUnroll,
-      s"k-truss peel (k=$k) realized $realized rounds but its oracle " +
+      s"k-truss peel (k=$k$what) realized $realized rounds but its oracle " +
       s"unrolls only $KTrussOracleUnroll — the ORACLE is exhausted, not " +
       "the operator wrong; raise GraphOps.KTrussOracleUnroll")
     df
   }
-
-  /** Same, over an arbitrary symmetrized edge relation. `rounds` bounds
-    * the loop (truncation-only, as with kCoreFrom). */
-  private[graft] def kTrussFrom(ue: DataFrame, k: Int = 3,
-      rounds: Int = Int.MaxValue): DataFrame =
-    kTrussWithRounds(ue, k, rounds)._1
 
   /** Node-space fold for the q178 k=4 truss — mirrored literally in the
     * oracle SQL; keep the two in sync. The fixture graph is too sparse
@@ -949,24 +921,18 @@ object GraphOps {
         (col("dst") % TrussDenseMod).as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
-    val (df, realized) = kTrussWithRounds(folded, k)
-    require(realized <= KTrussOracleUnroll,
-      s"k-truss peel (k=$k, folded) realized $realized rounds but its " +
-      s"oracle unrolls only $KTrussOracleUnroll — the ORACLE is " +
-      "exhausted, not the operator wrong; raise GraphOps.KTrussOracleUnroll")
-    df
+    kTrussInUnroll(folded, k, ", folded")
   }
 
-  /** [[kTrussFrom]] plus the realized round count. */
-  private[graft] def kTrussWithRounds(ue: DataFrame, k: Int = 3,
-      rounds: Int = Int.MaxValue): (DataFrame, Int) = {
+  /** k-truss over an arbitrary symmetrized edge relation, plus the
+    * realized round count. The loop state is
+    * the kept canonical edges (a < b) with the support that kept them —
+    * counted over the round's input edges, which is the final edge set's
+    * own support once a round drops nothing, so a converged peel needs
+    * no extra triangle pass for its output. `ue` must be deduplicated. */
+  private[graft] def kTrussWithRounds(ue: DataFrame,
+      k: Int = 3): (DataFrame, Int) = {
     val minSup = k - 2
-    var edges = ue.filter(col("src") < col("dst"))
-      .select(col("src").as("a"), col("dst").as("b"))
-      .localCheckpoint(true)
-    var nEdges = edges.count()
-    var round = 0
-    var converged = nEdges == 0
     def support(e: DataFrame): DataFrame = {
       // Re-orient the SURVIVING edges low-degree→high-degree (id
       // tie-break — e is canonical a<b, so `<=` encodes it) so the
@@ -999,30 +965,14 @@ object GraphOps {
         .groupBy(col("a"), col("b"))
         .agg(count(lit(1)).as("support"))
     }
-    // The converged (confirming) round's support IS the final edge
-    // set's support — the semi-join kept every edge — so keeping the
-    // round's materialized support saves the output line a whole extra
-    // triangle-enumeration pass (the loop's dominant cost). The eager
-    // localCheckpoint that enables the reuse replaces the inline
-    // computation the semi-join paid anyway.
-    var lastSup: Option[DataFrame] = None
-    while (!converged && round < rounds) {
-      val sup = support(edges).localCheckpoint(true)
-      edges = edges
-        .join(sup.filter(col("support") >= minSup)
-          .select(col("a"), col("b")), Seq("a", "b"), "left_semi")
-        .localCheckpoint(true)
-      val m = edges.count()
-      converged = m == nEdges
-      if (converged) lastSup = Some(sup)
-      nEdges = m
-      round += 1
+    // every support row is an input edge, so the filtered support
+    // relation IS the kept edge set
+    val (kept, round) = Fixpoint.run(ue.filter(col("src") < col("dst"))
+        .select(col("src").as("a"), col("dst").as("b")), Int.MaxValue,
+        signature = Some((e: DataFrame) => e.count())) { (edges, _) =>
+      support(edges).filter(col("support") >= minSup)
     }
-    // truncated (round cap) or empty-input exits recompute as before
-    val supFinal = lastSup.getOrElse(support(edges))
-    (edges.join(supFinal, Seq("a", "b"), "left")
-      .select(col("a").as("src"), col("b").as("dst"),
-        coalesce(col("support"), lit(0L)).as("support"))
+    (kept.select(col("a").as("src"), col("b").as("dst"), col("support"))
       .orderBy(col("src"), col("dst")), round)
   }
 
@@ -1097,8 +1047,7 @@ object GraphOps {
     * a (node, c) count, a label-keyed degree-mass aggregate, and one
     * node-keyed argmax window — all linear in edge mass; a 20k-degree
     * hub contributes ≤ degree candidate rows, so no hub cap is needed
-    * (candidate mass is bounded by the edge list itself). Lineage cut
-    * per round. */
+    * (candidate mass is bounded by the edge list itself). */
   def modularityCommunities(spark: SparkSession, dir: String,
       rounds: Int = LouvainRounds): DataFrame =
     modularityCommunitiesFrom(undirectedEdges(Tables(spark, dir)), rounds)
@@ -1126,9 +1075,9 @@ object GraphOps {
       .agg(sum(col("w")).as("deg")).persist()
     val m2 = deg.agg(sum(col("deg"))).head().getLong(0) // 2m
     val links = edges.filter(col("src") =!= col("dst"))
-    var labels = deg.select(col("node"), col("node").as("label"))
-      .localCheckpoint(true)
-    for (r <- 1 to rounds) {
+    val (labels, _) = Fixpoint.run(
+        deg.select(col("node"), col("node").as("label")), rounds) {
+        (labels, r) =>
       val kic = links
         .join(labels.select(col("node").as("dst"), col("label").as("c")),
           Seq("dst"))
@@ -1160,13 +1109,12 @@ object GraphOps {
         .orderBy(col("gain").desc,
           when(col("c") === col("label"), lit(0)).otherwise(lit(1)),
           col("c").asc)
-      labels = scored
+      scored
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("node"),
           when(pmod(col("node"), lit(2)) === lit(r % 2), col("c"))
             .otherwise(col("label")).as("label"))
-        .localCheckpoint(true)
     }
     edges.unpersist(); deg.unpersist()
     labels
@@ -1226,28 +1174,24 @@ object GraphOps {
     * the tie-break so the result is exact and SQL-oracleable). Per round:
     * one join to fetch neighbor labels + one count aggregation + one
     * per-node argmax window — all partitioned by node id, no global
-    * barrier beyond the shuffles. localCheckpoint truncates lineage. */
+    * barrier beyond the shuffles. */
   def labelPropagation(spark: SparkSession, dir: String,
       rounds: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val edges = undirectedEdges(Tables(spark, dir)).persist()
-    var labels = edges.select(col("src").as("node"))
-      .distinct()
-      .withColumn("label", col("node"))
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      val nbrLabels = labels
+    val w = Window.partitionBy(col("node"))
+      .orderBy(col("cnt").desc, col("label").asc)
+    val (labels, _) = Fixpoint.run(
+        edges.select(col("src").as("node")).distinct()
+          .withColumn("label", col("node")), rounds) { (labels, _) =>
+      labels
         .join(edges, col("node") === col("dst"))
         .select(col("src").as("node"), col("label"))
-      val counts = nbrLabels.groupBy(col("node"), col("label"))
+        .groupBy(col("node"), col("label"))
         .agg(count(lit(1)).as("cnt"))
-      val w = Window.partitionBy(col("node"))
-        .orderBy(col("cnt").desc, col("label").asc)
-      labels = counts
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("node"), col("label"))
-        .localCheckpoint(true)
     }
     edges.unpersist()
     labels.select(col("node"), col("label").as("community"))
@@ -1262,7 +1206,7 @@ object GraphOps {
     * PageRank, this carries an exact SQL oracle. Error vs the real-valued
     * iteration is ≤ 1 micro-rank per node per superstep. Per iteration:
     * one broadcast-or-shuffle join of ranks onto edges + one sum shuffle
-    * on dst — the standard 2-shuffle PR round; lineage cut per round. */
+    * on dst — the standard 2-shuffle PR round. */
   def pageRank(spark: SparkSession, dir: String,
       iterations: Int = 10): DataFrame =
     pageRankFrom(spark, directedEdges(Tables(spark, dir)), iterations)
@@ -1274,75 +1218,43 @@ object GraphOps {
     * units, `div` contributions, 15%/85% damping as 150000/85·s div
     * 100), so 10 unrolled iterations replay bit-exactly in SQL; the
     * only change is r0 = 10⁶·e_source and the per-round teleport CASE.
-    * Scale shape identical to q36: two shuffles per round, lineage cut
-    * per round. Nodes never touched by the walk report 0 — the honest
-    * "not reachable" signal. */
+    * Nodes never touched by the walk report 0 — the honest "not
+    * reachable" signal. */
   def personalizedPageRank(spark: SparkSession, dir: String,
-      source: Long = 1L, iterations: Int = 10): DataFrame = {
-    val de = directedEdges(Tables(spark, dir))
-    val outdeg = de.groupBy(col("src")).agg(count(lit(1)).as("out_deg"))
-    val edgesWithDeg = de.join(outdeg, Seq("src")).persist()
-    val nodes = de.select(col("src").as("node"))
-      .union(de.select(col("dst").as("node")))
-      .distinct().persist()
-    def teleport = when(col("node") === source, lit(150000L)).otherwise(lit(0L))
-    var ranks = nodes
-      .withColumn("rank",
-        when(col("node") === source, lit(1000000L)).otherwise(lit(0L)))
-      .localCheckpoint(true)
-    for (_ <- 1 to iterations) {
-      val sums = ranks
-        .join(edgesWithDeg, col("node") === col("src"))
-        .select(col("dst").as("node"), expr("rank div out_deg").as("contrib"))
-        .groupBy(col("node"))
-        .agg(sum(col("contrib")).as("s"))
-      ranks = nodes.join(sums, Seq("node"), "left")
-        .select(col("node"),
-          (teleport + expr("(85 * coalesce(s, 0L)) div 100")).as("rank"))
-        .localCheckpoint(true)
-    }
-    edgesWithDeg.unpersist(); nodes.unpersist()
-    ranks.select(col("node"), col("rank").as("ppr_micro"))
-      .orderBy(col("node"))
-  }
+      source: Long = 1L, iterations: Int = 10): DataFrame =
+    pageRankFrom(spark, directedEdges(Tables(spark, dir)), iterations,
+        source = Some(source))
+      .select(col("node"), col("rank_micro").as("ppr_micro"))
 
   /** Edge-parameterized fixed-point PageRank (ScaleSmoke runs this on
-    * amplified edge sets).
-    *
-    * Lineage-cut policy: by default every round ends in
-    * `localCheckpoint(true)` — fast, but executor-local and
-    * non-recoverable (an executor loss mid-run kills the job). With
-    * `durableEvery = N > 0`, every Nth round instead writes a RELIABLE
-    * `checkpoint()` to `spark.sparkContext.getCheckpointDir` (set it to a
-    * fault-tolerant FS first) — the Spark analogue of the reference's
-    * buffer-pool `checkpoint()` flushing all dirty pages to disk
-    * (`buffer_pool.cpp:363-377`): a lost executor recomputes at most N-1
-    * rounds from the last durable snapshot instead of restarting the job.
-    * Results are bit-identical in both modes (the fixpoint is integer
-    * arithmetic; checkpointing only changes recovery, not values). */
+    * amplified edge sets); with a `source`, the personalized variant.
+    * `durableEvery` = N > 0 makes every Nth round a reliable checkpoint
+    * (see [[Fixpoint]]); results are bit-identical in both modes (the
+    * fixpoint is integer arithmetic; checkpointing only changes recovery,
+    * not values). */
   private[graft] def pageRankFrom(spark: SparkSession, de: DataFrame,
-      iterations: Int = 10, durableEvery: Int = 0): DataFrame = {
-    require(durableEvery == 0 || spark.sparkContext.getCheckpointDir.nonEmpty,
-      "durableEvery > 0 needs spark.sparkContext.setCheckpointDir(...)")
+      iterations: Int = 10, durableEvery: Int = 0,
+      source: Option[Long] = None): DataFrame = {
+    def atSource(v: Long): Column = source.fold(lit(v))(s =>
+      when(col("node") === s, lit(v)).otherwise(lit(0L)))
     val outdeg = de.groupBy(col("src")).agg(count(lit(1)).as("out_deg"))
     val edgesWithDeg = de.join(outdeg, Seq("src")).persist()
     val nodes = de.select(col("src").as("node"))
       .union(de.select(col("dst").as("node")))
       .distinct().persist()
-    def cut(df: DataFrame, round: Int): DataFrame =
-      if (durableEvery > 0 && round % durableEvery == 0) df.checkpoint(true)
-      else df.localCheckpoint(true)
-    var ranks = cut(nodes.withColumn("rank", lit(1000000L)), 0)
-    for (i <- 1 to iterations) {
+    val (ranks, _) = Fixpoint.run(
+        nodes.withColumn("rank", atSource(1000000L)), iterations,
+        durableEvery) { (ranks, _) =>
       val sums = ranks
         .join(edgesWithDeg, col("node") === col("src"))
         .select(col("dst").as("node"),
           expr("rank div out_deg").as("contrib"))
         .groupBy(col("node"))
         .agg(sum(col("contrib")).as("s"))
-      ranks = cut(nodes.join(sums, Seq("node"), "left")
+      nodes.join(sums, Seq("node"), "left")
         .select(col("node"),
-          (lit(150000L) + expr("(85 * coalesce(s, 0L)) div 100")).as("rank")), i)
+          (atSource(150000L) + expr("(85 * coalesce(s, 0L)) div 100"))
+            .as("rank"))
     }
     edgesWithDeg.unpersist(); nodes.unpersist()
     ranks.select(col("node"), col("rank").as("rank_micro"))
@@ -1362,8 +1274,7 @@ object GraphOps {
     *
     * Scale shape per round: two (edge join + node-keyed sum) passes and
     * two 1-row max aggregates broadcast back — all map-side combinable,
-    * nothing quadratic; localCheckpoint truncates per-round lineage
-    * like the other iterative families. */
+    * nothing quadratic. */
   def hits(spark: SparkSession, dir: String): DataFrame =
     hitsFrom(directedEdges(Tables(spark, dir)))
 
@@ -1372,10 +1283,9 @@ object GraphOps {
     val edges = de.persist()
     val nodes = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node"))).distinct().persist()
-    var scores = nodes
-      .select(col("node"), lit(1000000L).as("hub"), lit(1000000L).as("auth"))
-      .localCheckpoint(true)
-    for (_ <- 1 to iterations) {
+    val (scores, _) = Fixpoint.run(nodes.select(col("node"),
+        lit(1000000L).as("hub"), lit(1000000L).as("auth")), iterations) {
+        (scores, _) =>
       val araw = nodes.join(
           edges.join(scores.select(col("node").as("src"), col("hub")),
               Seq("src"))
@@ -1399,9 +1309,8 @@ object GraphOps {
       // hnorm and anorm each already carry EVERY node (both are built
       // from the nodes left join), so one equi-join reassembles the
       // score pair — no third join back to the node relation
-      scores = hnorm.join(anorm, Seq("node"))
+      hnorm.join(anorm, Seq("node"))
         .select(col("node"), col("hub"), col("auth"))
-        .localCheckpoint(true)
     }
     edges.unpersist(); nodes.unpersist()
     scores.select(col("node"), col("hub").as("hub_ppm"),
@@ -1425,9 +1334,7 @@ object GraphOps {
     val m = maxCust(t)
     require(m > 0, s"nonpositive max c_custkey $m at $dir")
     val sources = (0 until k).map(i => 1L + (i.toLong * 41L) % m).distinct
-    val unweighted = symmetrizedEdges(t)
-      .select(col("src"), col("dst"), lit(1L).as("w"))
-    val per = multiSourceCostsFrom(spark, unweighted, sources, maxHops)
+    val per = multiSourceCostsFrom(spark, hopEdges(t), sources, maxHops)
       .groupBy(col("origin"))
       .agg(max(col("cost")).as("eccentricity"),
         count(lit(1)).as("n_reached"))

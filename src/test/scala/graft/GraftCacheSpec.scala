@@ -42,6 +42,35 @@ class GraftCacheSpec extends AnyFunSuite {
     rb.unpersist()
   }
 
+  test("persisted: a same-plan second call asks Spark to cache nothing") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("spec.cacheWarnings", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        warned.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val log = LogManager.getLogger(
+      "org.apache.spark.sql.execution.CacheManager").asInstanceOf[Logger]
+    log.addAppender(appender)
+    try {
+      val first = GraftCache.persisted("spec.rewarn", totals(spark, sf))
+      warned.clear()
+      val second = GraftCache.persisted("spec.rewarn", totals(spark, sf))
+      assert(second.storageLevel != StorageLevel.NONE)
+      val again = warned.asScala.filter(_.contains("already cached"))
+      assert(again.isEmpty, again.mkString("\n"))
+      first.unpersist()
+    } finally {
+      log.removeAppender(appender)
+      appender.stop()
+    }
+  }
+
   test("persisted: a changed input unpersists the slot's previous frame") {
     val small = GraftCache.persisted("spec.rotate", totals(spark, sf))
     assert(small.storageLevel != StorageLevel.NONE)

@@ -1383,20 +1383,62 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("maxCust is memoized per fixture dir — graph queries reuse the constant") {
-    // Deterministic proof of no re-derivation (no job counting, no
-    // sleeps): poison the cached constant and observe that the next edge
-    // derivation embeds the poisoned literal instead of rescanning.
-    GraphOps.maxCustCache.clear()
-    GraphOps.directedEdges(graft.Tables(spark, sf))
-    assert(GraphOps.maxCustCache.contains(sf))
-    val real = GraphOps.maxCustCache(sf)
+  test("maxCust is held per session — a second derivation runs no Spark job") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def derived(dir: String): (Long, Int) = {
+      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+      jobs.set(0)
+      val m = GraphOps.maxCust(graft.Tables(spark, dir))
+      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+      (m, jobs.get())
+    }
+    val sf01 = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
+    val want = graft.Tables(spark, sf).customer
+      .agg(max(col("c_custkey"))).head().getLong(0)
+    spark.sparkContext.addSparkListener(listener)
     try {
-      GraphOps.maxCustCache(sf) = real + 9999L
-      val plan = GraphOps.directedEdges(graft.Tables(spark, sf))
-        .queryExecution.analyzed.toString
-      assert(plan.contains((real + 9999L).toString), plan)
-    } finally GraphOps.maxCustCache(sf) = real
+      derived(sf01) // the slot now holds the other fixture's constant
+      val (built, buildJobs) = derived(sf)
+      val (held, heldJobs) = derived(sf)
+      assert(built == want && held == want)
+      assert(buildJobs > 0, "a changed customer relation must re-derive")
+      assert(heldJobs == 0, s"the second derivation ran $heldJobs jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("iterative graph loops leave only the returned state's RDD persisted") {
+    // each loop cuts every round; the rounds before the last, and any
+    // relation the loop persisted for itself, must be released
+    import org.apache.spark.sql.execution.LogicalRDD
+    import spark.implicits._
+    val sc = spark.sparkContext
+    def leftBehind(call: => org.apache.spark.sql.DataFrame): Set[Int] = {
+      val before = sc.getPersistentRDDs.keySet
+      val out = call
+      val state = out.queryExecution.analyzed.collectLeaves().collect {
+        case r: LogicalRDD => r.rdd.id }.toSet
+      assert(state.nonEmpty, "the returned frame should read a cut state")
+      sc.getPersistentRDDs.keySet.toSet -- before -- state
+    }
+    val routed = leftBehind(GraphOps.multiSourceCostsFrom(spark,
+      GraphOps.symmetrizedEdges(graft.Tables(spark, sf))
+        .select(col("src"), col("dst"), lit(1L).as("w")), Seq(1L, 2L), 4))
+    assert(routed.isEmpty, s"routing sweep left $routed")
+    val k5 = for { a <- 1L to 5L; b <- (a + 1) to 5L } yield (a, b)
+    val strip = Seq((4L, 6L), (5L, 6L), (5L, 7L), (6L, 7L), (6L, 8L),
+      (7L, 8L), (7L, 9L), (8L, 9L), (8L, 10L), (9L, 10L))
+    val e = k5 ++ strip
+    val truss = leftBehind(GraphOps.kTrussWithRounds(
+      (e ++ e.map(_.swap)).toDF("src", "dst"), k = 4)._1)
+    assert(truss.isEmpty, s"k-truss peel left $truss")
+    val ranked = leftBehind(GraphOps.pageRankFrom(spark,
+      GraphOps.directedEdges(graft.Tables(spark, sf)), iterations = 4))
+    assert(ranked.isEmpty, s"pagerank left $ranked")
   }
 
   test("routing sweep durable checkpoint: reliable snapshots, identical costs") {

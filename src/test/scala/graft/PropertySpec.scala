@@ -862,7 +862,7 @@ class PropertySpec extends AnyFunSuite {
         }
         val want = edges.map(e => e -> supports(edges).getOrElse(e, 0L)).toMap
         val ue = (canon ++ canon.map(_.swap)).toDF("src", "dst")
-        val got = operators.GraphOps.kTrussFrom(ue, k = 3)
+        val got = operators.GraphOps.kTrussWithRounds(ue, k = 3)._1
           .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
           .toMap
         assert(got == want, s"edges=$canon")
